@@ -3299,9 +3299,9 @@ def evt_theilsen_trend(spark, sf_dir):
     """,
     description=(
         "streaming count-min heavy hitters: micro-batches feed "
-        "cell-count partials into a batch-id-versioned parquet sketch "
-        "state (at-least-once replays skipped, atomic symlink "
-        "publish); the d x w grid never grows, so streaming state is "
+        "cell-count partials into a batch-id-ledgered parquet sketch "
+        "state (at-least-once replays skipped, one manifest commit "
+        "per batch); the d x w grid never grows, so streaming state is "
         "FIXED-SIZE forever — the property that lets a heavy-hitter "
         "monitor run unbounded on an unbounded stream. The bucket "
         "hash is the portable salted-md5 recipe, so the drained grid "

@@ -2103,8 +2103,8 @@ def evt_did_estimate(spark, sf_dir):
     description=(
         "streaming distinct-user monitor: per-type PORTABLE m=256 HLL "
         "register tables folded across micro-batches through the "
-        "batch-id-versioned parquet state's max-merge (at-least-once "
-        "replays skipped, atomic symlink publish — the CMS stream's "
+        "batch-id-ledgered parquet state's max-merge (at-least-once "
+        "replays skipped, one manifest commit per batch — the CMS stream's "
         "exactly-once mechanics with register max instead of integer "
         "sums). State is |types|×256 integer rows forever; register "
         "max is split-invariant, so the drained table equals a "

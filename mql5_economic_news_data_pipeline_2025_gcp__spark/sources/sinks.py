@@ -108,9 +108,11 @@ def compact_parquet(
 
     - **Commit-log root** (has ``_commits/`` — written by
       ``sources.txn`` or adopted via ``txn.adopt``): delegate to
-      ``txn.compact``, which commits the new file list as one atomic
-      manifest rename — readers NEVER see a missing or partial table,
-      and in-flight snapshot readers keep their version until vacuum.
+      ``txn.compact``, which commits the new file list as one manifest
+      through txn's commit loop — readers NEVER see a missing or
+      partial table, in-flight snapshot readers keep their version
+      until vacuum, and a racing writer's commit is rebuilt on, never
+      overwritten.
       This is the default maintenance path; plain directories can opt
       in with one no-data-movement ``txn.adopt(path)`` call.
     - **Plain directory**: stage to a sibling, then swap via two

@@ -5,14 +5,14 @@ Why this exists: directory-swap publishing (``sinks.compact_parquet``,
 ``replace`` mode) has a reader-visible window — two renames can't be
 atomic together. The commit-log format removes the problem by never
 mutating published state: data files are immutable once written, and
-the ONLY mutation anywhere is the atomic rename of a manifest into
+the ONLY mutation anywhere is the atomic create of a manifest in
 ``_commits/`` — readers resolve the latest manifest and see exactly
 one committed snapshot, before or after, never between.
 
 What a manifest buys, concretely:
 
-- **Atomic publish**: one ``os.rename`` per commit (POSIX-atomic;
-  object stores use if-none-match PUTs — same protocol).
+- **Atomic publish**: one create-if-absent ``os.link`` per commit
+  (POSIX-atomic; object stores use if-none-match PUTs — same protocol).
 - **Snapshot isolation**: a reader that resolved version N keeps
   reading N's files even while N+1 commits — vacuum, not commit, is
   the only thing that can break an in-flight reader, which is why
@@ -22,18 +22,28 @@ What a manifest buys, concretely:
 - **Atomic compaction**: rewrite small files, commit the new list as
   version N+1 — readers never see a missing table (the exact failure
   ADVICE flagged in the rename-swap compactor).
-- **Optimistic concurrency**: two writers racing to version N — one
-  rename wins, the loser sees the collision and retries against the
-  new head (append) or aborts (overwrite), exactly the
-  compare-and-swap loop of the real formats.
+
+One commit protocol: every mutation runs the same optimistic-concurrency
+loop (:func:`_commit`). Each pass resolves the head, hands its manifest
+(None on an empty root) to the caller's builder, and publishes what the
+builder returns as head+1. The builder writes the new data files and
+returns the next file list, or None for "no commit" (a replayed batch
+id, a DELETE that hits nothing, an OPTIMIZE with nothing to fold). A CAS
+loss re-runs the builder against the NEW head, so the read-set is always
+re-resolved: an append carries the winner's files forward, and a merge,
+delete or compaction rebuilds from the winner's snapshot instead of
+overwriting it — the compare-and-swap loop of the real formats, coded
+once. Only ``adopt`` and ``clone`` commit outside it: each writes
+version 0 of a root that has no log yet, in one shot.
 
 Scale notes: manifests list files, not rows — a 100 TB table's
 manifest is MBs; resolution cost is one listing of ``_commits/``
 (object stores: one prefix list). File-level min/max pruning stats
 ride the same manifest (``overwrite_with_stats`` + ``read_pruned``:
 the scan never lists pruned files, one step beyond footer-level
-skipping), and ``append_exactly_once`` makes the manifest chain an
-idempotence ledger for streaming ``foreachBatch`` sinks.
+skipping), and ``last_batch_id`` makes the manifest chain an
+idempotence ledger for streaming ``foreachBatch`` sinks
+(``append_exactly_once`` and the streaming fold states).
 """
 
 from __future__ import annotations
@@ -80,6 +90,28 @@ def _read_manifest(root: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _head(root: str) -> tuple[int, dict | None]:
+    """The head version (-1 on an empty root) and its manifest."""
+    vs = versions(root)
+    return (vs[-1], _read_manifest(root, vs[-1])) if vs else (-1, None)
+
+
+def _snapshot(root: str, version: int | None = None) -> tuple[int, dict]:
+    """Resolve ``version`` (default: the head) to ``(version, manifest)``.
+    A root with no commits raises :class:`FileNotFoundError`, so every
+    reader fails the same loud way."""
+    if version is not None:
+        return version, _read_manifest(root, version)
+    version, m = _head(root)
+    if m is None:
+        raise FileNotFoundError(f"no commits at {root}")
+    return version, m
+
+
+def _scan(spark: SparkSession, root: str, files: list[str]) -> DataFrame:
+    return spark.read.parquet(*[os.path.join(root, f) for f in files])
+
+
 def _write_files(df: DataFrame, root: str) -> list[str]:
     """Write df's parquet files under a fresh uuid dir; return paths
     RELATIVE to root (manifests must survive a table move/copy)."""
@@ -112,19 +144,62 @@ def _try_commit(root: str, version: int, manifest: dict) -> None:
         os.unlink(tmp)
 
 
+def _commit(root: str, op: str, build) -> int | None:
+    """The commit loop every mutation runs. ``build(manifest)`` gets the
+    head's manifest (None on an empty root), writes the data files it
+    needs and returns the new manifest's body (``files`` plus any extra
+    keys), or None to commit nothing. Returns the committed version, or
+    None when the builder declined. On a CAS loss ``build`` runs again
+    against the new head."""
+    while True:
+        head, m = _head(root)
+        body = build(m)
+        if body is None:
+            return None
+        v = head + 1
+        try:
+            _try_commit(root, v, {"version": v, "op": op, **body})
+            return v
+        except CommitConflict:
+            continue
+
+
+def _last_batch_id(m: dict | None) -> int:
+    """The batch-id ledger a ``foreachBatch`` sink keeps in the manifest
+    chain: the last batch id committed (-1 before the first)."""
+    return -1 if m is None else m.get("last_batch_id", -1)
+
+
+def _commit_batch(root: str, op: str, batch_id: int, build) -> int | None:
+    """:func:`_commit` for an at-least-once ``foreachBatch`` sink: a
+    batch id the head's ledger already holds commits nothing (re-checked
+    after every conflict, so a retry racing its original commits at most
+    once), and each commit records ``batch_id`` as ``last_batch_id``."""
+
+    def guarded(m):
+        if batch_id <= _last_batch_id(m):
+            return None
+        return {**build(m), "last_batch_id": batch_id}
+
+    return _commit(root, op, guarded)
+
+
+def _files(m: dict | None) -> list[str]:
+    return m["files"] if m is not None else []
+
+
+def _existing_files(m: dict | None, root: str) -> list[str]:
+    if m is None:
+        raise FileNotFoundError(f"no commits at {root}")
+    return m["files"]
+
+
 def overwrite(df: DataFrame, root: str) -> int:
     """Replace the table contents in one commit; returns the version."""
     files = _write_files(df, root)
-    while True:
-        head = versions(root)
-        v = (head[-1] + 1) if head else 0
-        try:
-            _try_commit(root, v, {"version": v, "op": "overwrite", "files": files})
-            return v
-        except CommitConflict:
-            # another writer advanced the head; an overwrite replaces
-            # whatever is there, so just claim the next slot
-            continue
+    # an overwrite replaces whatever the head holds: a retry just claims
+    # the next slot with the same files
+    return _commit(root, "overwrite", lambda m: {"files": files})
 
 
 def append(df: DataFrame, root: str) -> int:
@@ -132,17 +207,7 @@ def append(df: DataFrame, root: str) -> int:
     version. On a CAS loss the retry re-reads the NEW head's file list —
     the race never drops the other writer's rows."""
     new_files = _write_files(df, root)
-    while True:
-        head = versions(root)
-        base = _read_manifest(root, head[-1])["files"] if head else []
-        v = (head[-1] + 1) if head else 0
-        try:
-            _try_commit(
-                root, v, {"version": v, "op": "append", "files": base + new_files}
-            )
-            return v
-        except CommitConflict:
-            continue
+    return _commit(root, "append", lambda m: {"files": _files(m) + new_files})
 
 
 def adopt(root: str) -> int:
@@ -179,26 +244,24 @@ def adopt(root: str) -> int:
 def read(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
     """Snapshot read of ``version`` (default: latest). Empty manifest →
     empty frame is impossible here (parquet always writes ≥1 file)."""
-    vs = versions(root)
-    if not vs:
-        raise FileNotFoundError(f"no commits at {root}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(root, v)
-    paths = [os.path.join(root, f) for f in m["files"]]
-    return spark.read.parquet(*paths)
+    return _scan(spark, root, _snapshot(root, version)[1]["files"])
 
 
 def compact(spark: SparkSession, root: str, target_file_mb: int = 128) -> int:
     """Rewrite the current snapshot into ~``target_file_mb`` files and
     commit the new list — fully atomic from any reader's view (the old
-    version stays intact and readable until vacuumed)."""
-    cur = read(spark, root)
-    m = _read_manifest(root, versions(root)[-1])
-    size_b = sum(
-        os.path.getsize(os.path.join(root, f)) for f in m["files"]
-    )
-    n_files = max(1, round(size_b / (target_file_mb * 1024 * 1024)))
-    return overwrite(cur.coalesce(n_files), root)
+    version stays intact and readable until vacuumed). A writer that
+    commits first makes the rewrite start over from its snapshot, so a
+    racing append is never compacted away."""
+
+    def build(m):
+        files = _existing_files(m, root)
+        size_b = sum(os.path.getsize(os.path.join(root, f)) for f in files)
+        n_files = max(1, round(size_b / (target_file_mb * 1024 * 1024)))
+        cur = _scan(spark, root, files).coalesce(n_files)
+        return {"files": _write_files(cur, root)}
+
+    return _commit(root, "overwrite", build)
 
 
 def vacuum(root: str, keep_last: int = 1) -> int:
@@ -277,15 +340,15 @@ def merge_upsert(
 
     Protocol: read current snapshot → prune to touched partitions
     (path-level: untouched files are never opened) → union + rank
-    (incoming wins recency ties) → write merged partitions → commit
-    (carried ∪ new). CAS loss retries the whole merge against the new
-    head (the read-set must be re-resolved — this is serializable,
-    not just atomic)."""
+    (incoming wins, then ``recency_col`` desc, then ``tie_col`` desc —
+    the same ranking keeps the newest of several versions of one key
+    inside the batch) → write merged partitions → commit (carried ∪
+    new). On an empty root nothing is carried and the batch alone is
+    ranked. CAS loss retries the whole merge against the new head (the
+    read-set must be re-resolved — this is serializable, not just
+    atomic)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
 
     touched = {
         str(r[0])
@@ -293,64 +356,33 @@ def merge_upsert(
             incoming[partition_col].cast("string")
         ).distinct().collect()
     }
-    # the batch itself obeys the key contract: keep-newest within the
-    # batch before it ever touches the table (a batch can carry
-    # multiple versions of one key — e.g. rapid re-publishes)
-    wb = _W.partitionBy(*key).orderBy(
-        _F.col(recency_col).desc(), _F.col(tie_col).desc()
+    w = Window.partitionBy(*key).orderBy(
+        F.col("_pri").desc(),
+        F.col(recency_col).desc(),
+        F.col(tie_col).desc(),
     )
-    incoming = (
-        incoming.withColumn("_rn", _F.row_number().over(wb))
-        .filter(_F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    while True:
-        head = versions(root)
-        if not head:
-            files = _write_files_partitioned(incoming, root, partition_col)
-            try:
-                _try_commit(
-                    root, 0, {"version": 0, "op": "merge", "files": files}
-                )
-                return 0
-            except CommitConflict:
-                continue
-        base = _read_manifest(root, head[-1])["files"]
+
+    def build(m):
+        base = _files(m)
         carried = [f for f in base if _file_partition(f) not in touched]
-        hot = [
-            os.path.join(root, f)
-            for f in base
-            if _file_partition(f) in touched
-        ]
-        w = Window.partitionBy(*key).orderBy(
-            F.col("_pri").desc(),
-            F.col(recency_col).desc(),
-            F.col(tie_col).desc(),
-        )
-        cols = incoming.columns
+        hot = [f for f in base if _file_partition(f) in touched]
+        unioned = incoming.withColumn("_pri", F.lit(1))
         if hot:
-            existing_hot = spark.read.parquet(*hot).select(*cols)
+            existing_hot = _scan(spark, root, hot).select(*incoming.columns)
             unioned = existing_hot.withColumn("_pri", F.lit(0)).unionByName(
-                incoming.withColumn("_pri", F.lit(1))
+                unioned
             )
-        else:
-            unioned = incoming.withColumn("_pri", F.lit(1))
         merged = (
             unioned.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_pri", "_rn")
         )
-        new_files = _write_files_partitioned(merged, root, partition_col)
-        v = head[-1] + 1
-        try:
-            _try_commit(
-                root,
-                v,
-                {"version": v, "op": "merge", "files": carried + new_files},
-            )
-            return v
-        except CommitConflict:
-            continue
+        return {
+            "files": carried
+            + _write_files_partitioned(merged, root, partition_col)
+        }
+
+    return _commit(root, "merge", build)
 
 
 # ------------------------------------- file-level stats / data skipping
@@ -406,23 +438,9 @@ def overwrite_with_stats(
     stats = {
         f: _footer_stats(os.path.join(root, f), stat_cols) for f in files
     }
-    while True:
-        head = versions(root)
-        v = (head[-1] + 1) if head else 0
-        try:
-            _try_commit(
-                root,
-                v,
-                {
-                    "version": v,
-                    "op": "overwrite",
-                    "files": files,
-                    "stats": stats,
-                },
-            )
-            return v
-        except CommitConflict:
-            continue
+    return _commit(
+        root, "overwrite", lambda m: {"files": files, "stats": stats}
+    )
 
 
 def read_pruned(
@@ -433,20 +451,7 @@ def read_pruned(
     lists the pruned files). Returns (frame filtered exactly, files
     scanned, files total). Files without stats are conservatively
     scanned."""
-    from pyspark.sql import functions as F
-
-    vs = versions(root)
-    m = _read_manifest(root, vs[-1])
-    stats = m.get("stats", {})
-    keep = []
-    for f in m["files"]:
-        s = stats.get(f, {}).get(col)
-        if s is None or not (s[1] < lo or s[0] > hi):
-            keep.append(os.path.join(root, f))
-    df = spark.read.parquet(*keep).filter(
-        (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    )
-    return df, len(keep), len(m["files"])
+    return read_pruned_multi(spark, root, {col: (lo, hi)})
 
 
 def read_pruned_multi(
@@ -456,33 +461,31 @@ def read_pruned_multi(
     only if its [min,max] overlaps every ``{col: (lo, hi)}`` predicate
     — the k-dimensional rectangle probe a Z-ordered table
     (``layout.write_zordered``) is built for. Files without stats for
-    any predicate column are conservatively scanned. Returns
+    any predicate column are conservatively scanned. When no file
+    overlaps, the frame is empty with the table's schema. Returns
     (exactly-filtered frame, files scanned, files total)."""
     from pyspark.sql import functions as F
 
-    vs = versions(root)
-    m = _read_manifest(root, vs[-1])
+    _, m = _snapshot(root)
     stats = m.get("stats", {})
-    keep = []
-    for f in m["files"]:
+
+    def overlaps(f: str) -> bool:
         fs = stats.get(f, {})
-        ok = True
         for c, (lo, hi) in preds.items():
             s = fs.get(c)
             if s is not None and (s[1] < lo or s[0] > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(os.path.join(root, f))
+                return False
+        return True
+
+    keep = [f for f in m["files"] if overlaps(f)]
     if not keep:
-        empty = spark.createDataFrame([], read(spark, root, vs[-1]).schema)
-        return empty, 0, len(m["files"])
+        schema = _scan(spark, root, m["files"]).schema
+        return spark.createDataFrame([], schema), 0, len(m["files"])
     cond = None
     for c, (lo, hi) in preds.items():
         p = (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
         cond = p if cond is None else (cond & p)
-    df = spark.read.parquet(*keep).filter(cond)
-    return df, len(keep), len(m["files"])
+    return _scan(spark, root, keep).filter(cond), len(keep), len(m["files"])
 
 
 # ------------------------------------------ exactly-once streaming sink
@@ -491,37 +494,18 @@ def read_pruned_multi(
 def append_exactly_once(df: DataFrame, root: str, batch_id: int) -> int | None:
     """Idempotent append for ``foreachBatch`` (at-least-once retries):
     the manifest chain carries ``last_batch_id``; a replayed batch id
-    ≤ the committed head's is a no-op, and the CAS loop re-checks after
-    every conflict — so a retry racing its own original can commit at
-    most once. Returns the committed version, or None if skipped."""
+    ≤ the committed head's is a no-op, and the commit loop re-checks
+    after every conflict — so a retry racing its own original can commit
+    at most once. Returns the committed version, or None if skipped."""
     new_files = None
-    while True:
-        head = versions(root)
-        last = (
-            _read_manifest(root, head[-1]).get("last_batch_id", -1)
-            if head
-            else -1
-        )
-        if batch_id <= last:
-            return None
+
+    def build(m):
+        nonlocal new_files
         if new_files is None:
             new_files = _write_files(df, root)
-        base = _read_manifest(root, head[-1])["files"] if head else []
-        v = (head[-1] + 1) if head else 0
-        try:
-            _try_commit(
-                root,
-                v,
-                {
-                    "version": v,
-                    "op": "append",
-                    "files": base + new_files,
-                    "last_batch_id": batch_id,
-                },
-            )
-            return v
-        except CommitConflict:
-            continue
+        return {"files": _files(m) + new_files}
+
+    return _commit_batch(root, "append", batch_id, build)
 
 
 # -------------------------------------- schema evolution / CDC / IVM
@@ -535,11 +519,7 @@ def read_evolved(
     as null. Kept separate from :func:`read` because merging schemas
     reads every file's footer up front — pay it only when the table
     actually evolved."""
-    vs = versions(root)
-    if not vs:
-        raise FileNotFoundError(f"no commits at {root}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(root, v)
+    _, m = _snapshot(root, version)
     paths = [os.path.join(root, f) for f in m["files"]]
     return spark.read.option("mergeSchema", "true").parquet(*paths)
 
@@ -554,16 +534,16 @@ def changes(
     merge commits it is the new state of every REWRITTEN partition
     (consumer semantics: upsert-by-partition). Cost: reads only the
     added files — never the table."""
-    vs = versions(root)
-    to_v = vs[-1] if to_version is None else to_version
-    base = set(
-        _read_manifest(root, since_version)["files"]
-    ) if since_version in vs else set()
-    cur = _read_manifest(root, to_v)["files"]
-    added = [os.path.join(root, f) for f in cur if f not in base]
+    _, m = _snapshot(root, to_version)
+    base = (
+        set(_read_manifest(root, since_version)["files"])
+        if os.path.exists(_manifest_path(root, since_version))
+        else set()
+    )
+    added = [f for f in m["files"] if f not in base]
     if not added:
-        return spark.createDataFrame([], read(spark, root, to_v).schema)
-    return spark.read.parquet(*added)
+        return spark.createDataFrame([], _scan(spark, root, m["files"]).schema)
+    return _scan(spark, root, added)
 
 
 # ------------------------------------------- row-level DELETE / OPTIMIZE
@@ -595,49 +575,32 @@ def delete_where(
     """
     from pyspark.sql import functions as F
 
-    while True:
-        head = versions(root)
-        if not head:
-            raise FileNotFoundError(f"no commits at {root}")
-        base = _read_manifest(root, head[-1])["files"]
-        paths = [os.path.join(root, f) for f in base]
-        tagged = spark.read.parquet(*paths).withColumn(
-            "_f", F.input_file_name()
-        )
+    out = None
+
+    def build(m):
+        nonlocal out
+        base = _existing_files(m, root)
+        tagged = _scan(spark, root, base).withColumn("_f", F.input_file_name())
         hit_abs = {
-            r[0].replace("file://", "")
+            os.path.abspath(r[0].replace("file://", ""))
             for r in tagged.filter(F.expr(predicate))
             .select("_f")
             .distinct()
             .collect()
         }
-        hit = [
-            f for f in base if os.path.join(os.path.abspath(root), f) in
-            {os.path.abspath(p) for p in hit_abs}
-        ]
-        carried = [f for f in base if f not in set(hit)]
+        root_abs = os.path.abspath(root)
+        hit, carried = [], []
+        for f in base:
+            (hit if os.path.join(root_abs, f) in hit_abs else carried).append(f)
+        out = (m["version"], len(hit), len(carried))
         if not hit:
-            return head[-1], 0, len(carried)
-        kept = (
-            spark.read.parquet(*[os.path.join(root, f) for f in hit])
-            .filter(~F.expr(predicate))
-        )
+            return None
+        kept = _scan(spark, root, hit).filter(~F.expr(predicate))
         new_files = [] if kept.isEmpty() else _write_files(kept, root)
-        v = head[-1] + 1
-        try:
-            _try_commit(
-                root,
-                v,
-                {
-                    "version": v,
-                    "op": "delete",
-                    "predicate": predicate,
-                    "files": carried + new_files,
-                },
-            )
-            return v, len(hit), len(carried)
-        except CommitConflict:
-            continue
+        return {"predicate": predicate, "files": carried + new_files}
+
+    v = _commit(root, "delete", build)
+    return out if v is None else (v, *out[1:])
 
 
 def optimize_files(
@@ -655,16 +618,18 @@ def optimize_files(
     current head unchanged when <2 small files exist (nothing to fold).
     """
     target_b = target_file_mb * 1024 * 1024
-    while True:
-        head = versions(root)
-        if not head:
-            raise FileNotFoundError(f"no commits at {root}")
-        base = _read_manifest(root, head[-1])["files"]
+    out = None
+
+    def build(m):
+        nonlocal out
+        base = _existing_files(m, root)
         sized = [(f, os.path.getsize(os.path.join(root, f))) for f in base]
         small = [(f, s) for f, s in sized if s < target_b]
         carried = [f for f, s in sized if s >= target_b]
         if len(small) < 2:
-            return head[-1], 0, len(base)
+            out = (m["version"], 0, len(base))
+            return None
+        out = (m["version"], len(small), len(carried))
         # greedy first-fit over size-descending small files
         bins: list[list[str]] = []
         bin_sz: list[int] = []
@@ -679,18 +644,11 @@ def optimize_files(
                 bin_sz.append(s)
         new_files: list[str] = []
         for b in bins:
-            df = spark.read.parquet(*[os.path.join(root, f) for f in b])
-            new_files += _write_files(df.coalesce(1), root)
-        v = head[-1] + 1
-        try:
-            _try_commit(
-                root,
-                v,
-                {"version": v, "op": "optimize", "files": carried + new_files},
-            )
-            return v, len(small), len(carried)
-        except CommitConflict:
-            continue
+            new_files += _write_files(_scan(spark, root, b).coalesce(1), root)
+        return {"files": carried + new_files}
+
+    v = _commit(root, "optimize", build)
+    return out if v is None else (v, *out[1:])
 
 
 def row_diff(
@@ -715,22 +673,21 @@ def row_diff(
     CHANGED-file rows on the key, never of the table."""
     from pyspark.sql import functions as F
 
-    vs = versions(root)
-    to_v = vs[-1] if v_to is None else v_to
+    _, m_to = _snapshot(root, v_to)
     from_files = set(_read_manifest(root, v_from)["files"])
-    to_files = set(_read_manifest(root, to_v)["files"])
-    old_only = [os.path.join(root, f) for f in sorted(from_files - to_files)]
-    new_only = [os.path.join(root, f) for f in sorted(to_files - from_files)]
+    to_files = set(m_to["files"])
+    old_only = sorted(from_files - to_files)
+    new_only = sorted(to_files - from_files)
 
-    schema = read(spark, root, to_v).schema
+    schema = _scan(spark, root, m_to["files"]).schema
     out_schema = schema.add("_op", "string")
     if not old_only and not new_only:
         return spark.createDataFrame([], out_schema)
 
-    def load(paths):
-        if not paths:
+    def load(files):
+        if not files:
             return spark.createDataFrame([], schema)
-        return spark.read.parquet(*paths)
+        return _scan(spark, root, files)
 
     old, new = load(old_only), load(new_only)
     val_cols = [c for c in new.columns if c not in key]
@@ -785,11 +742,7 @@ def clone(src_root: str, dest_root: str, version: int | None = None) -> int:
     filesystems. Returns the destination's version (always 0)."""
     import shutil
 
-    vs = versions(src_root)
-    if not vs:
-        raise FileNotFoundError(f"no commits at {src_root}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(src_root, v)
+    v, m = _snapshot(src_root, version)
     os.makedirs(dest_root, exist_ok=True)
     for rel in m["files"]:
         src = os.path.join(src_root, rel)

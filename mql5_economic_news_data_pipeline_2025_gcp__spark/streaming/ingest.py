@@ -31,6 +31,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import txn
+
 #: Stateful-operator partition count for the drains below. Streaming
 #: state partitioning is a DEPLOYMENT knob, not a data-scale artifact:
 #: it is fixed into the checkpoint at first start, each partition costs
@@ -451,13 +453,12 @@ def stream_incremental_rollup(
 
     Exactly-once state upkeep under foreachBatch's AT-LEAST-ONCE
     contract: ``merge_partials`` is not idempotent (a replayed batch
-    would double-count sums), so each state version directory is named
-    by the batch id that produced it (``v{batch_id}``) and a retried
-    batch id ≤ the current version is SKIPPED. The live version is
-    published by an atomic symlink swap (write ``v{n}``, create a temp
-    link, ``os.rename`` over ``current``) — a crash mid-fold leaves the
-    previous version intact and readers always resolve a complete
-    state table, never a half-written one.
+    would double-count sums), so the state is a ``sources.txn`` table
+    whose manifests record the last applied batch id, and a retried
+    batch id ≤ it is SKIPPED. Each fold publishes the new state with
+    one manifest commit — a crash mid-fold leaves the previous version
+    as the head and readers always resolve a complete state table,
+    never a half-written one.
     """
     state = ParquetRollupState(
         spark,
@@ -487,35 +488,55 @@ def stream_incremental_rollup(
     return state.read()
 
 
-class ParquetRollupState:
-    """Batch-id-versioned parquet state table for foreachBatch rollup
-    upkeep (the exactly-once mechanics of ``stream_incremental_rollup``,
-    factored out so the retry/crash semantics are unit-testable).
+class _TxnFoldState:
+    """Parquet state table for foreachBatch upkeep, kept as a
+    ``sources.txn`` table whose manifest chain is the batch-id ledger:
+    each fold merges the micro-batch into the head's state and commits
+    the result, with ``last_batch_id``, through txn's commit loop.
 
     - ``fold(batch_df, batch_id)`` SKIPS batch ids ≤ the last applied —
-      foreachBatch is at-least-once and ``merge_partials`` is not
-      idempotent, so a replayed micro-batch must not double-count.
-    - Each merge writes a fresh ``v{batch_id}`` directory and publishes
-      it with an atomic symlink swap; a crash at any point leaves the
-      previous complete version live.
+      foreachBatch is at-least-once and the merges are not idempotent
+      (sums would double-count), so a replayed micro-batch must not be
+      applied twice (``txn._commit_batch`` keeps that ledger).
+    - A failure anywhere before the commit leaves the previous complete
+      version as the head: readers never resolve a half-written state.
+
+    Subclasses differ only in ``_merge(old, batch_df)`` (``old`` is None
+    before the first commit).
+    """
+
+    def __init__(self, spark, root):
+        self.spark = spark
+        self.root = root
+
+    def applied_batch(self) -> int:
+        return txn._last_batch_id(txn._head(self.root)[1])
+
+    def fold(self, batch_df: DataFrame, batch_id: int) -> None:
+        def build(m):
+            old = None if m is None else txn._scan(self.spark, self.root, m["files"])
+            return {"files": txn._write_files(self._merge(old, batch_df), self.root)}
+
+        txn._commit_batch(self.root, "overwrite", batch_id, build)
+
+    def read(self) -> DataFrame:
+        return txn.read(self.spark, self.root)
+
+
+class ParquetRollupState(_TxnFoldState):
+    """Batch-id-ledgered rollup state for foreachBatch upkeep (the
+    exactly-once mechanics of ``stream_incremental_rollup``, factored
+    out so the retry/crash semantics are unit-testable): each batch is
+    reduced to per-group partials and folded in with ``merge_partials``.
     """
 
     def __init__(self, spark, root, keys, sums=(), mins=(), maxs=()):
-        self.spark = spark
-        self.root = root
-        self.current = os.path.join(root, "current")
+        super().__init__(spark, root)
         self.keys, self.sums, self.mins, self.maxs = keys, sums, mins, maxs
 
-    def applied_batch(self) -> int:
-        if not os.path.lexists(self.current):
-            return -1
-        return int(os.path.basename(os.path.realpath(self.current))[1:])
-
-    def fold(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _merge(self, old, batch_df: DataFrame) -> DataFrame:
         from ..operators.incremental import merge_partials, partial_agg
 
-        if batch_id <= self.applied_batch():
-            return  # at-least-once retry of an already-merged batch
         new = partial_agg(
             batch_df,
             keys=self.keys,
@@ -523,22 +544,7 @@ class ParquetRollupState:
             mins=self.mins,
             maxs=self.maxs,
         )
-        if os.path.lexists(self.current):
-            old = self.spark.read.parquet(self.current)
-            merged = merge_partials(old, new, keys=self.keys)
-        else:
-            merged = new
-        version = os.path.join(self.root, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(version)
-        tmp = os.path.join(self.root, ".current.tmp")
-        if os.path.lexists(tmp):
-            os.unlink(tmp)
-        os.symlink(version, tmp)
-        os.rename(tmp, self.current)  # atomic publish
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.current)
-
+        return new if old is None else merge_partials(old, new, keys=self.keys)
 
 
 def stream_view_purchase_unmatched(
@@ -680,8 +686,9 @@ def stream_heavy_hitters(
     The sketch's mergeability is exactly what incremental streaming
     state wants — each micro-batch contributes cell-count partials and
     the state table (a d×w grid, fixed size forever) absorbs them via
-    the same batch-id-versioned ``ParquetRollupState`` as the rollup
-    stream (at-least-once replays skipped, atomic symlink publish). The
+    the same batch-id-ledgered ``ParquetRollupState`` as the rollup
+    stream (at-least-once replays skipped, one manifest commit per
+    batch). The
     stream side is STATELESS map work: key → d (depth, bucket) probes;
     the fold's partial agg collapses each batch to ≤ d·w cells before
     the state merge. After a full drain the streamed sketch is
@@ -762,10 +769,9 @@ def stream_heavy_hitters(
     )
 
 
-class ParquetSketchState:
-    """Batch-id-versioned parquet state for MERGEABLE SKETCHES: same
-    exactly-once mechanics as :class:`ParquetRollupState` (skip applied
-    batch ids, version directories, atomic symlink publish), but the
+class ParquetSketchState(_TxnFoldState):
+    """Batch-id-ledgered parquet state for MERGEABLE SKETCHES: same
+    exactly-once mechanics as :class:`ParquetRollupState`, but the
     merge is ``hll_union_agg`` over binary sketch columns instead of
     integer sums. Because HLL union is register-wise max — associative,
     commutative, idempotent at the register level — the drained state is
@@ -774,41 +780,20 @@ class ParquetSketchState:
     """
 
     def __init__(self, spark, root, keys, value_col, lgk: int = 12):
-        self.spark = spark
-        self.root = root
-        self.current = os.path.join(root, "current")
+        super().__init__(spark, root)
         self.keys, self.value_col, self.lgk = keys, value_col, lgk
 
-    def applied_batch(self) -> int:
-        if not os.path.lexists(self.current):
-            return -1
-        return int(os.path.basename(os.path.realpath(self.current))[1:])
-
-    def fold(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.applied_batch():
-            return  # at-least-once retry of an already-merged batch
+    def _merge(self, old, batch_df: DataFrame) -> DataFrame:
         new = batch_df.groupBy(*self.keys).agg(
             F.expr(f"hll_sketch_agg({self.value_col}, {self.lgk})").alias("sk")
         )
-        if os.path.lexists(self.current):
-            old = self.spark.read.parquet(self.current)
-            merged = (
-                old.unionByName(new)
-                .groupBy(*self.keys)
-                .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            )
-        else:
-            merged = new
-        version = os.path.join(self.root, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(version)
-        tmp = os.path.join(self.root, ".current.tmp")
-        if os.path.lexists(tmp):
-            os.unlink(tmp)
-        os.symlink(version, tmp)
-        os.rename(tmp, self.current)  # atomic publish
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.current)
+        if old is None:
+            return new
+        return (
+            old.unionByName(new)
+            .groupBy(*self.keys)
+            .agg(F.expr("hll_union_agg(sk)").alias("sk"))
+        )
 
 
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -821,7 +806,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     256, rho = 25 − bit_length(hash div 256)), the same engine-portable
     register recipe as the batch ``evt_hll_portable_rollup`` (plans/
     queries_r6.py). State is the (event_type, bucket) → max(rho) table
-    folded through the batch-id-versioned ``ParquetRollupState``
+    folded through the batch-id-ledgered ``ParquetRollupState``
     max-merge — |types| × 256 integer rows forever, the fixed-memory
     property that lets a distinct-count monitor run unbounded. Register
     max is associative/commutative/idempotent, so the drained table is

@@ -550,11 +550,17 @@ def interval_union_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             self._n = handle.getValueState("n", "n long")
 
         def handleInputRows(self, key, rows, timerValues):
-            # no exists() probes (r14): ListState.get() on an absent key
-            # is an EMPTY iterator and ValueState.get() returns None —
-            # each dropped exists() is one state-server round trip per
-            # key per batch (guide §4: fewer JVM↔Python crossings)
-            merged = [(int(s), int(e)) for s, e in self._segments.get()]
+            # the ListState keeps its exists() probe: the list client's
+            # get() raises StopIteration on ANY non-OK server status, so
+            # get() alone would read a state-server error as empty state
+            # and silently reset the interval set; exists() raises on
+            # unexpected statuses. ValueState.get() surfaces errors
+            # itself (absent key -> None), so that read needs no probe.
+            merged = (
+                [(int(s), int(e)) for s, e in self._segments.get()]
+                if self._segments.exists()
+                else []
+            )
             prev_n = self._n.get()
             n = prev_n[0] if prev_n is not None else 0
             for pdf in rows:

@@ -126,3 +126,28 @@ def test_plain_dir_crash_between_renames_recovers(spark, tmp_path):
     # table restored, no .precompact stranded
     assert spark.read.parquet(path).count() == n
     assert not os.path.exists(path + ".precompact")
+
+
+def test_compact_keeps_a_racing_append(spark, tmp_path, monkeypatch):
+    """Lost update: an append that commits while compact is rewriting
+    must survive. The compaction's commit then loses the CAS race and
+    has to rebuild from the new head, not publish its stale rewrite."""
+    root = str(tmp_path / "race")
+    txn.overwrite(spark.range(0, 200).withColumnRenamed("id", "k"), root)
+
+    real_write = txn._write_files
+    calls = {"n": 0}
+
+    def racing_write(df, at):
+        calls["n"] += 1
+        if calls["n"] == 1:  # compact's first rewrite: race it
+            extra = spark.range(1000, 1010).withColumnRenamed("id", "k")
+            txn.append(extra, root)
+        return real_write(df, at)
+
+    monkeypatch.setattr(txn, "_write_files", racing_write)
+    txn.compact(spark, root)
+
+    head = txn.read(spark, root)
+    assert head.count() == 210
+    assert head.filter("k >= 1000").count() == 10

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.cleaning import (
@@ -15,6 +16,7 @@ from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.cleaning import 
     high_water_mark_filter,
 )
 from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.upsert import upsert
+from mql5_economic_news_data_pipeline_2025_gcp__spark.sources import txn
 from mql5_economic_news_data_pipeline_2025_gcp__spark.sources.csv_source import (
     read_raw_events_csv,
 )
@@ -413,6 +415,39 @@ def test_txn_data_skipping_and_exactly_once_sink(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert txn.read(spark, r3).count() == 1000
+
+
+def test_txn_read_pruned_disjoint_range_is_empty(spark, tmp_path):
+    """A range no file overlaps prunes every file: the read is an empty
+    frame with the table's schema, not a schema-inference error."""
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.sources import txn
+
+    root = str(tmp_path / "tbl")
+    df = spark.range(0, 1000).withColumnRenamed("id", "k").selectExpr(
+        "k", "k * 2 AS v"
+    )
+    txn.overwrite_with_stats(df, root, stat_cols=["k"], num_files=4)
+    got, scanned, total = txn.read_pruned(spark, root, "k", 5000, 6000)
+    assert (scanned, total) == (0, 4)
+    assert got.count() == 0
+    assert got.schema == txn.read(spark, root).schema
+
+
+@pytest.mark.parametrize(
+    "reader",
+    [
+        lambda spark, root: txn.changes(spark, root, since_version=0),
+        lambda spark, root: txn.row_diff(spark, root, ["k"], v_from=0),
+        lambda spark, root: txn.read_pruned(spark, root, "k", 0, 1),
+        lambda spark, root: txn.read_pruned_multi(spark, root, {"k": (0, 1)}),
+    ],
+    ids=["changes", "row_diff", "read_pruned", "read_pruned_multi"],
+)
+def test_txn_readers_on_uncommitted_root_raise(spark, tmp_path, reader):
+    """Every snapshot reader resolves the head the same way: a root with
+    no commits is a loud FileNotFoundError, as in read and clone."""
+    with pytest.raises(FileNotFoundError):
+        reader(spark, str(tmp_path / "empty"))
 
 
 def test_txn_schema_evolution_and_cdc_ivm(spark, tmp_path):

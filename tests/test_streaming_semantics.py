@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -216,6 +217,47 @@ def test_rollup_state_retry_is_idempotent(spark, tmp_path):
     }
     assert state.applied_batch() == 1
     assert out["a"] == (115, 3) and out["b"] == (1, 1)
+
+
+def test_rollup_state_fold_survives_failed_commit(spark, tmp_path, monkeypatch):
+    """A fold that dies at the commit leaves the previous batch as the
+    state: read() and applied_batch() still show it, and replaying the
+    failed batch id applies it exactly once."""
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.sources import txn
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.ingest import (
+        ParquetRollupState,
+    )
+
+    state = ParquetRollupState(spark, str(tmp_path), keys=("k",), sums=("v",))
+    b0 = spark.createDataFrame([("a", 10), ("b", 1)], "k string, v long")
+    b1 = spark.createDataFrame([("a", 100)], "k string, v long")
+    state.fold(b0, 0)
+
+    real_commit = txn._try_commit
+    calls = {"n": 0}
+
+    def crash_once(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise OSError("simulated crash at commit")
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(txn, "_try_commit", crash_once)
+    with pytest.raises(OSError):
+        state.fold(b1, 1)
+    assert state.applied_batch() == 0
+    assert {r["k"]: r["sum_v"] for r in state.read().collect()} == {
+        "a": 10,
+        "b": 1,
+    }
+
+    state.fold(b1, 1)  # the replay after the crash applies the batch
+    state.fold(b1, 1)  # and a second replay is skipped
+    assert state.applied_batch() == 1
+    assert {r["k"]: (r["sum_v"], r["n"]) for r in state.read().collect()} == {
+        "a": (110, 2),
+        "b": (1, 1),
+    }
 
 
 def test_stream_cms_equals_batch(spark):
