@@ -895,14 +895,12 @@ def doc_corpus_overlap(spark, sf_dir):
         MINHASH_SEEDS,
         _base_hash,
         _uhash,
-        shingle_array,
+        shingles,
     )
 
     docs = fan_out(spark, t(spark, sf_dir, "documents"))
     sh = (
-        docs.select(
-            "source", F.explode(shingle_array("text", 3)).alias("shingle")
-        )
+        shingles(docs, n=3, id_col="source")
         .groupBy("source", "shingle")
         .agg(F.lit(1))
         .select("source", "shingle")

@@ -4403,55 +4403,36 @@ def doc_dupgraph_bfs(spark, sf_dir):
     """Breadth-first hop distances over the near-duplicate graph.
 
     Dup-graph neighborhoods answer "how far does this contamination
-    cluster reach?" — the same iterative equi-join shape as the CC
-    dedup clustering, but distance-labelled.  Edges are the LSH banded
+    cluster reach?" — the same iterative shape as the CC dedup
+    clustering, but distance-labelled.  Edges are the LSH banded
     candidate pairs (map-side minhash signatures → band equi-join —
     never all-pairs), symmetrized; BFS runs MULTI-SOURCE from every
     local-minimum node (no neighbor with a smaller id — each
     component's natural roots), so one pass labels the whole graph.
-    Each of the three synchronous rounds is an edge join keyed on the
-    node id followed by a min-dist aggregate on the same key — one
-    co-partitioned shuffle per round.  ``localCheckpoint`` truncates
-    the iteration lineage exactly as the CC operator does.
+
+    The pairs are checkpointed eagerly and counted once, and the count
+    picks the path (:func:`..operators.dedup.dupgraph_hops`):
+    - at most ``BFS_LOCAL_MAX_PAIRS`` pairs (every registry scale
+      factor: 32 pairs at sf0.01, 829 at sf0.1), one single-partition
+      pandas BFS. It adds no exchange and runs no Spark job while the
+      plan is built; three checkpointed rounds would launch about
+      twelve there to walk a graph one worker holds in well under a MB;
+    - above it, three distributed rounds (edge join + min-dist
+      aggregate, one co-partitioned shuffle each).
 
     The 3-hop cap bounds work AND makes the oracle's recursive CTE
-    (distinct (node, dist) states) terminate; production BFS over a
-    100 TB dup-graph keeps a frontier frame instead of re-expanding
-    the full distance table per round — noted here because at 3
-    rounds the simpler full re-expand costs less than the extra
-    anti-join a frontier needs.
+    (distinct (node, dist) states) terminate.
     """
-    from ..operators.dedup import lsh_candidate_pairs, minhash_signatures_mapside
+    from ..operators.dedup import (
+        dupgraph_hops,
+        lsh_candidate_pairs,
+        minhash_signatures_mapside,
+    )
 
     docs = fan_out(spark, t(spark, sf_dir, "documents"))
     sig = minhash_signatures_mapside(docs, n=3, num_hashes=8)
     pairs = lsh_candidate_pairs(sig, bands=4, rows_per_band=2).localCheckpoint()
-    edges = (
-        pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
-        .unionAll(
-            pairs.select(F.col("id_b").alias("s"), F.col("id_a").alias("d"))
-        )
-        .localCheckpoint(eager=False)
-    )
-    cur = (
-        edges.groupBy("s")
-        .agg(F.min("d").alias("mn"))
-        .filter(F.col("mn") > F.col("s"))
-        .select(F.col("s").alias("v"), F.lit(0).alias("dist"))
-    )
-    for r in (1, 2, 3):
-        expanded = cur.join(edges, cur["v"] == edges["s"]).select(
-            F.col("d").alias("v"), F.lit(r).alias("dist")
-        )
-        cur = (
-            cur.unionAll(expanded)
-            .groupBy("v")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return cur.select(
-        F.col("v").alias("doc_id"), F.col("dist").cast("bigint").alias("hops")
-    )
+    return dupgraph_hops(pairs)
 
 
 @register(

@@ -238,16 +238,24 @@ def doc_boilerplate_prefixes(spark, sf_dir):
     from ..operators.dedup import _tokens
 
     docs = t(spark, sf_dir, "documents")
-    tk = _tokens("text")
-    fp = docs.filter(F.size(tk) >= 10).select(
+    # tokens in their own projection, read twice above it (size guard +
+    # head slice) so CollapseProject keeps it apart. No Filter on the
+    # size: predicate pushdown would substitute the tokeniser into it
+    # and tokenise every doc twice. Short docs get a NULL fingerprint
+    # instead, which count("fp") skips, so their group has n_docs = 0
+    # and falls to the n_docs >= 2 filter.
+    tk = F.col("_tk")
+    fp = docs.select("doc_id", "source", _tokens("text").alias("_tk")).select(
         "doc_id",
         "source",
-        F.md5(F.concat_ws(" ", F.slice(tk, 1, 10))).alias("fp"),
+        F.when(
+            F.size(tk) >= 10, F.md5(F.concat_ws(" ", F.slice(tk, 1, 10)))
+        ).alias("fp"),
     )
     return (
         fp.groupBy("fp")
         .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.count("fp").cast("bigint").alias("n_docs"),
             F.countDistinct("source").cast("bigint").alias("n_sources"),
             F.min("doc_id").cast("bigint").alias("min_doc_id"),
         )

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Executed-plan audit over the whole query registry: exchange / scan /
-Python-seam counts per query, sorted worst-first.
+Python-seam / lambda-invariant counts per query, sorted worst-first.
 
 This is the tool behind the round-4 de-duplication passes: a DataFrame
 referenced N times re-derives its lineage N times (Spark has no
@@ -92,6 +92,50 @@ def runtime_reused_exchanges(spark, spark_fn, sf_dir: str) -> int:
     return plan.split("== Initial Plan ==")[0].count("ReusedExchange")
 
 
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _invariant_in_body(e) -> tuple[bool, int]:
+    """(whether ``e`` references a lambda variable, its count). A
+    lambda-free non-leaf counts 1 — itself, the largest such
+    subexpression once its parent does reference a variable; a node
+    that references one sums its children."""
+    kids = _seq(e.children())
+    if not kids:
+        return e.getClass().getSimpleName() == "NamedLambdaVariable", 0
+    walked = [_invariant_in_body(k) for k in kids]
+    if any(var for var, _ in walked):
+        return True, sum(n for _, n in walked)
+    return False, 1
+
+
+def _lambda_invariants(e) -> int:
+    if "lambdafunction(" not in e.toString():
+        return 0
+    if e.getClass().getSimpleName() == "LambdaFunction":
+        return _invariant_in_body(e.function())[1]
+    return sum(_lambda_invariants(k) for k in _seq(e.children()))
+
+
+def lambda_invariant_exprs(df) -> int:
+    """Count, in ``df``'s optimized logical plan, the largest non-leaf
+    subexpressions inside a ``LambdaFunction`` body that reference no
+    lambda variable. Catalyst does no common-subexpression elimination
+    inside lambda bodies, so each one is re-evaluated for every array
+    element although its value never changes — e.g. a tokeniser inside
+    a per-shingle ``transform`` runs once per shingle. The fix is to
+    project it into a column below. Lambdas below a checkpoint are
+    not in the plan and do not count. Pinned by
+    ``tests/test_plan_audit_counters.py``."""
+    n, todo = 0, [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        n += sum(_lambda_invariants(e) for e in _seq(node.expressions()))
+        todo.extend(_seq(node.children()))
+    return n
+
+
 def main() -> None:
     from mql5_economic_news_data_pipeline_2025_gcp__spark.plans import REGISTRY
     from mql5_economic_news_data_pipeline_2025_gcp__spark.session import get_spark
@@ -110,12 +154,8 @@ def main() -> None:
         ) and name not in BATCH_DESPITE_TAG:
             continue
         try:
-            plan = (
-                spec.spark_fn(spark, SF_DIR)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
+            df = spec.spark_fn(spark, SF_DIR)
+            plan = df._jdf.queryExecution().executedPlan().toString()
             rows.append(
                 {
                     "query": name,
@@ -129,6 +169,7 @@ def main() -> None:
                     "reused_exchanges": static_reused_exchanges(
                         spark, spec.spark_fn, SF_DIR
                     ),
+                    "lambda_invariant_exprs": lambda_invariant_exprs(df),
                     **(
                         {
                             "runtime_reused_exchanges": (

@@ -25,10 +25,15 @@ sys.path.insert(
 
 from plan_audit import (  # noqa: E402
     RUNTIME_REUSE_CLAIMS,
+    lambda_invariant_exprs,
     runtime_reused_exchanges,
     static_reused_exchanges,
 )
 
+from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.dedup import (  # noqa: E402
+    _tokens,
+    shingles,
+)
 from mql5_economic_news_data_pipeline_2025_gcp__spark.plans import REGISTRY  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -96,3 +101,37 @@ def test_word_bigram_entropy_exchange_count_matches_scale_claim(spark):
     )
     n = plan.count("Exchange hashpartitioning")
     assert n == 3, f"SCALE.md claims 3 exchanges, measured {n}"
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [(1, "a b c d e"), (2, "x  y z")], "doc_id long, text string"
+    )
+
+
+def test_lambda_invariant_positive_control(spark):
+    """A per-shingle lambda built around the tokeniser re-runs it for
+    every shingle: the one lambda-free subexpression in its body, the
+    tokeniser, must count."""
+    toks = _tokens("text")
+    idx = F.sequence(F.lit(0), F.size(toks) - 3)
+    df = _docs(spark).select(
+        "doc_id",
+        F.explode(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)))
+        ).alias("shingle"),
+    )
+    assert lambda_invariant_exprs(df) == 1
+
+
+def test_lambda_invariant_negative_control(spark):
+    """The shingle kernel projects the tokens first, so its lambda
+    body reads only a column, literals and the lambda variable."""
+    df = shingles(_docs(spark))
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, "a b c"),
+        (1, "b c d"),
+        (1, "c d e"),
+        (2, "x y z"),
+    ]
+    assert lambda_invariant_exprs(df) == 0

@@ -10,7 +10,9 @@ and has to either justify a budget bump in the diff or restructure
 scripts/plan_audit.py). Going UNDER budget is silently fine.
 
 Budget ≠ total plan complexity: multi-table TPC-H shapes legitimately
-scan many tables; only hash exchanges are counted.
+scan many tables; only hash exchanges are counted. Iterative queries
+also get a Spark-job budget (``JOB_BUDGETS``), because the jobs they
+run while building are what the driver waits on.
 """
 
 from __future__ import annotations
@@ -624,4 +626,29 @@ def test_scan_budget(spark, name):
         f"{name}: {n} parquet scans > budget {SCAN_BUDGETS[name]} — a "
         f"shared frame re-derived its fact lineage; window-lift or fold "
         f"the consumer back into one aggregation\n{plan[:4000]}"
+    )
+
+
+#: query → max Spark jobs launched by building its plan AND collecting
+#: the result (DAG scheduler ``nextJobId`` delta). Jobs are what the
+#: driver waits on while an iterative query builds (eager checkpoints,
+#: lazy checkpoints over AQE stages, convergence counts), and unlike
+#: wall time the count is deterministic.
+JOB_BUDGETS = {
+    # eager pair checkpoint + one pair count + the single-partition BFS
+    # collect; one more on a cold session (the documents schema read).
+    # The three checkpointed distributed BFS rounds would launch 17.
+    "doc_dupgraph_bfs": 8,
+}
+
+
+@pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
+def test_job_budget(spark, name):
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    REGISTRY[name].spark_fn(spark, SF).collect()
+    n = sched.nextJobId() - j0
+    assert n <= JOB_BUDGETS[name], (
+        f"{name}: {n} Spark jobs > budget {JOB_BUDGETS[name]} for build + "
+        f"collect — a driver-side action or eager checkpoint crept in"
     )
