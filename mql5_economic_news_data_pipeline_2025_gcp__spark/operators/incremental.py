@@ -161,18 +161,12 @@ def refresh_rollup_changed_partitions(
             F.col(part_col).cast("string").isin(list(changed))
         )
         parts = partial_agg(delta, [part_col, *keys], sums=sums)
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        (
+            parts.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(part_col)
+            .parquet(rollup_dir)
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            parts.write.mode("overwrite").partitionBy(part_col).parquet(
-                rollup_dir
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
         os.makedirs(state_dir, exist_ok=True)
         tmp = fp_path + ".tmp"
         with open(tmp, "w") as fh:

@@ -3,29 +3,56 @@ UPDATE`` on UNIQUE(Date,Time,Currency,Event) — `SQL:20`, `PUSH:175-188`).
 
 Spark-first design: Parquet has no in-place update, so upsert =
 ``unionByName(existing, incoming)`` → window dedup keeping the newest
-version per natural key. A recency column decides the winner; within the
-same batch, a monotonically increasing ingest sequence breaks ties so
-"latest delivered wins" exactly like MySQL's ON DUPLICATE KEY UPDATE.
+version per natural key. Every upsert in the engine — this module's
+batch and partition-pruned forms, ``sources.txn.merge_upsert`` and the
+streaming ``foreachBatch`` merge built on it — ranks through the one
+kernel :func:`_keep_newest`: incoming beats existing, then the recency
+column, then tie columns.
 
 Scale notes (100 TB): the dedup is one hash shuffle on the natural key —
 the same cost profile as any wide agg. On a real deployment this is the
 classic Delta/Iceberg ``MERGE INTO``; without those jars we keep the
 union+window formulation, which AQE handles well under key skew. For
-incremental loads, partition the table by month(event_ts) and rewrite
-only partitions that received keys (partition pruning makes the
-read-back cheap).
+incremental loads, ``txn.merge_upsert`` rewrites only the partitions
+that received keys and carries the rest by reference.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Natural dedup identity of the events table (reference SQL:20).
 NATURAL_KEY = ["Date", "Time", "Currency", "Event"]
+
+
+def _keep_newest(
+    existing: DataFrame | None,
+    incoming: DataFrame,
+    key: Sequence[str],
+    recency_col: str,
+    tie_cols: Sequence[str],
+) -> DataFrame:
+    """Keep-newest-per-key over (existing ∪ incoming): incoming beats
+    existing, then ``recency_col`` desc, then ``tie_cols`` desc make the
+    winner deterministic when key+recency still collides. The same rank
+    keeps the newest of several versions of one key inside the batch.
+    With ``existing=None`` the batch is ranked alone, with no union."""
+    unioned = incoming.withColumn("_pri", F.lit(1))
+    if existing is not None:
+        unioned = existing.withColumn("_pri", F.lit(0)).unionByName(unioned)
+    w = Window.partitionBy(*key).orderBy(
+        F.col("_pri").desc(),
+        F.col(recency_col).desc(),
+        *[F.col(c).desc() for c in tie_cols],
+    )
+    return (
+        unioned.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_pri", "_rn")
+    )
 
 
 def upsert(
@@ -40,26 +67,14 @@ def upsert(
     containing the same key twice ends with the later row's values. The
     delivery order is captured as ``monotonically_increasing_id()`` over
     the incoming scan (increasing in file/row order per split)."""
-    inc = incoming.withColumn("_src_priority", F.lit(1)).withColumn(
-        "_ingest_seq", F.monotonically_increasing_id()
+    inc = incoming.withColumn("_ingest_seq", F.monotonically_increasing_id())
+    ex = (
+        None
+        if existing is None
+        else existing.withColumn("_ingest_seq", F.lit(-1).cast("long"))
     )
-    if existing is None:
-        unioned = inc
-    else:
-        unioned = (
-            existing.withColumn("_src_priority", F.lit(0))
-            .withColumn("_ingest_seq", F.lit(-1).cast("long"))
-            .unionByName(inc)
-        )
-    w = Window.partitionBy(*key).orderBy(
-        F.col("_src_priority").desc(),
-        F.col(recency_col).desc(),
-        F.col("_ingest_seq").desc(),
-    )
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src_priority", "_ingest_seq")
+    return _keep_newest(ex, inc, key, recency_col, ["_ingest_seq"]).drop(
+        "_ingest_seq"
     )
 
 
@@ -68,10 +83,8 @@ def upsert(
 # batch touches a handful of partitions; rewriting the whole table (the
 # plain union+window upsert above) re-shuffles and re-writes 100 TB to
 # apply a few GB. The merge below prunes BOTH sides to the partitions
-# actually present in the batch — the read-back scans only touched
-# partitions (partition pruning), and dynamic partition overwrite
-# replaces only those directories, leaving every untouched partition's
-# files byte-identical (asserted by test_merge_upsert_partition_pruned).
+# actually present in the batch; ``txn.merge_upsert`` is its write side,
+# carrying every untouched partition's files by reference.
 #
 # Precondition: the natural key must functionally determine the
 # partition column (the reference's key contains Date; partition =
@@ -84,9 +97,11 @@ def upsert(
 MAX_BATCH_PARTITIONS = 10_000
 
 
-def _touched_partitions(
-    incoming: DataFrame, partition_col: str, cap: int = MAX_BATCH_PARTITIONS
-) -> list:
+def _touched_partitions(incoming: DataFrame, partition_col) -> list:
+    """Distinct ``partition_col`` values (a name or a Column) of the
+    batch. At most ``MAX_BATCH_PARTITIONS + 1`` rows reach the driver;
+    one more than the cap raises."""
+    cap = MAX_BATCH_PARTITIONS
     vals = [
         r[0]
         for r in incoming.select(partition_col)
@@ -110,30 +125,6 @@ def _partition_filter(partition_col: str, vals: list):
     return cond
 
 
-def _merge_touched(
-    existing_touched: DataFrame,
-    incoming: DataFrame,
-    key: Sequence[str],
-    recency_col: str,
-    tie_cols: Sequence[str],
-) -> DataFrame:
-    """Keep-newest-per-key over (existing ∪ incoming); incoming beats
-    existing on recency ties, then ``tie_cols`` (descending) make the
-    winner deterministic when key+recency still collides."""
-    inc = incoming.withColumn("_pri", F.lit(1))
-    ex = existing_touched.withColumn("_pri", F.lit(0))
-    order = [F.col("_pri").desc(), F.col(recency_col).desc()] + [
-        F.col(c).desc() for c in tie_cols
-    ]
-    w = Window.partitionBy(*key).orderBy(*order)
-    return (
-        ex.unionByName(inc)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_pri")
-    )
-
-
 def merge_upsert_partitioned(
     existing: DataFrame,
     incoming: DataFrame,
@@ -141,7 +132,6 @@ def merge_upsert_partitioned(
     recency_col: str = "event_ts",
     tie_cols: Sequence[str] = (),
     partition_col: str = "event_month",
-    max_partitions: int = MAX_BATCH_PARTITIONS,
 ) -> tuple[DataFrame, list]:
     """Relational core of the partition-pruned merge: rows of
     ``existing`` in untouched partitions pass through UNREAD by the
@@ -153,61 +143,10 @@ def merge_upsert_partitioned(
     the natural key over touched-partition rows ONLY — cost is
     proportional to the batch's partitions, not the table.
     """
-    vals = _touched_partitions(incoming, partition_col, max_partitions)
+    vals = _touched_partitions(incoming, partition_col)
     cond = _partition_filter(partition_col, vals)
-    merged = _merge_touched(
+    merged = _keep_newest(
         existing.filter(cond), incoming, key, recency_col, tie_cols
     )
     untouched = existing.filter(~F.coalesce(cond, F.lit(False)))
     return untouched.unionByName(merged), vals
-
-
-def merge_upsert_to_path(
-    spark: SparkSession,
-    path: str,
-    incoming: DataFrame,
-    key: Sequence[str] = tuple(NATURAL_KEY),
-    recency_col: str = "event_ts",
-    tie_cols: Sequence[str] = (),
-    partition_col: str = "event_month",
-) -> list:
-    """Write-side S9 merge: apply an incremental batch to a
-    hive-partitioned parquet table, rewriting ONLY the partitions the
-    batch touches. Returns the touched partition values.
-
-    Mechanics: read back the table pruned to touched partitions, merge
-    keep-newest-per-key, then write with dynamic partition overwrite so
-    only touched partition directories are replaced. The merged frame is
-    ``localCheckpoint``-ed first — it is batch-sized (touched partitions
-    only), and materializing it breaks the plan's lineage on ``path`` so
-    the overwrite of a just-read location is legal and cannot corrupt
-    its own input. On a deployment with a transactional table format
-    (Delta/Iceberg) this whole function is ``MERGE INTO``; the parquet
-    formulation keeps identical semantics with per-partition atomicity.
-    """
-    deduped_in = _merge_touched(
-        incoming.limit(0), incoming, key, recency_col, tie_cols
-    )
-    if not os.path.exists(path):
-        _write_dynamic(deduped_in, path, partition_col)
-        return _touched_partitions(incoming, partition_col)
-
-    vals = _touched_partitions(incoming, partition_col)
-    existing = spark.read.parquet(path).filter(
-        _partition_filter(partition_col, vals)
-    )
-    merged = _merge_touched(
-        existing, incoming, key, recency_col, tie_cols
-    ).localCheckpoint()
-    _write_dynamic(merged, path, partition_col)
-    return vals
-
-
-def _write_dynamic(df: DataFrame, path: str, partition_col: str) -> None:
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -61,9 +61,9 @@ from .registry import register
         "without entering the dedup shuffle at all. This is the plan "
         "shape that makes monthly ingest O(batch) instead of O(table) at "
         "100 TB: bounded distinct() on the partition column, pruned "
-        "read-back, dynamic partition overwrite on the write side "
-        "(write side: operators/upsert.py merge_upsert_to_path, "
-        "byte-identity of untouched partitions asserted by "
+        "read-back, untouched partitions' files carried by reference "
+        "(write side: sources/txn.py merge_upsert, one atomic commit; "
+        "its equality with this relational core is asserted by "
         "test_merge_upsert_partition_pruned)"
     ),
     tags=("events", "upsert", "merge", "partitioning"),

@@ -111,26 +111,25 @@ def wide_codegen_session(spark: SparkSession) -> SparkSession:
     ``finally`` restore would have already undone the setting. The
     child's SQLConf travels WITH the returned DataFrame.
 
-    The child clones every explicitly-set ``spark.sql.*`` conf from the
-    parent (``SET`` output) so semantics-bearing session state — time
-    zone, legacy parquet flags, test-lowered thresholds — matches the
-    parent exactly; ``load_table`` additionally re-pins its two
-    required confs per call on whatever session it receives. Memoized
-    per parent session (weak keys — a stopped parent frees the entry).
+    On EVERY call the child re-syncs every explicitly-set ``spark.sql.*``
+    conf from the parent (and drops any the parent has since unset), so
+    semantics-bearing session state — time zone, legacy parquet flags,
+    test-lowered thresholds — matches the parent as of this call, not
+    as of first use. The child itself is memoized per parent session
+    (weak keys — a stopped parent frees the entry).
     """
     child = _WIDE_CODEGEN_SESSIONS.get(spark)
-    if child is not None:
-        return child
-    child = spark.newSession()
-    for row in spark.sql("SET").collect():
-        k, v = row[0], row[1]
-        if not k.startswith("spark.sql.") or "(redacted)" in str(v):
-            continue
-        try:
+    if child is None:
+        child = _WIDE_CODEGEN_SESSIONS[spark] = spark.newSession()
+    parent, mine = _sql_confs(spark), _sql_confs(child)
+    for k in mine.keys() - parent.keys():
+        child.conf.unset(k)
+    for k, v in parent.items():
+        if mine.get(k) != v:
             child.conf.set(k, v)
-        except Exception:
-            # static/non-settable conf (already inherited via SparkConf)
-            continue
     child.conf.set("spark.sql.codegen.maxFields", "256")
-    _WIDE_CODEGEN_SESSIONS[spark] = child
     return child
+
+
+def _sql_confs(spark: SparkSession) -> dict[str, str]:
+    return {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.")}

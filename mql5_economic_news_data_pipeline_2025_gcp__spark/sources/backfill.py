@@ -76,17 +76,13 @@ def backfill_partitions(
     )
     orphans = sorted(p for p in have if p not in want)
     if broken:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                source.filter(F.col(part_col).isin([p for p in broken]))
-                .write.mode("overwrite")
-                .partitionBy(part_col)
-                .parquet(target_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            source.filter(F.col(part_col).isin([p for p in broken]))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(part_col)
+            .parquet(target_dir)
+        )
     return {
         "checked": len(want),
         "repaired": len(broken),

@@ -60,13 +60,12 @@ def save_partitioned(
     partitions at plan time. With ``mode='overwrite'`` and dynamic
     partition overwrite, only partitions present in ``df`` are replaced.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def persist_splits(splits: dict[str, DataFrame], base_dir: str) -> dict[str, str]:

@@ -51,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -288,6 +289,8 @@ def vacuum(root: str, keep_last: int = 1) -> int:
 # ----------------------------------------------- partitioned MERGE
 
 _PDIR = "_p"
+#: Directory value Spark writes for a null or empty partition value.
+_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _write_files_partitioned(
@@ -313,11 +316,12 @@ def _write_files_partitioned(
 
 
 def _file_partition(relpath: str) -> str | None:
-    """Partition value encoded in a file's path, or None for files
+    """Partition value encoded in a file's path (unescaped, so a value
+    with ``:`` or ``/`` matches its string form), or None for files
     written unpartitioned."""
     for seg in relpath.split(os.sep):
         if seg.startswith(_PDIR + "="):
-            return seg[len(_PDIR) + 1 :]
+            return unquote(seg[len(_PDIR) + 1 :])
     return None
 
 
@@ -335,47 +339,35 @@ def merge_upsert(
     partitions the batch touches. Untouched partitions' files carry
     into the new manifest BY REFERENCE — zero bytes rewritten, the
     O(batch)-not-O(table) property the monthly-ingest path needs at
-    100 TB, now with an atomic commit instead of dynamic partition
-    overwrite's per-directory swaps.
+    100 TB, published by one atomic commit.
 
-    Protocol: read current snapshot → prune to touched partitions
-    (path-level: untouched files are never opened) → union + rank
-    (incoming wins, then ``recency_col`` desc, then ``tie_col`` desc —
-    the same ranking keeps the newest of several versions of one key
-    inside the batch) → write merged partitions → commit (carried ∪
-    new). On an empty root nothing is carried and the batch alone is
-    ranked. CAS loss retries the whole merge against the new head (the
-    read-set must be re-resolved — this is serializable, not just
-    atomic)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    Protocol: collect the batch's partition values (capped at
+    ``upsert.MAX_BATCH_PARTITIONS``) → read current snapshot → prune to
+    touched partitions (path-level: untouched files are never opened)
+    → rank with ``upsert._keep_newest`` (incoming wins, then
+    ``recency_col`` desc, then ``tie_col`` desc) → write merged
+    partitions → commit (carried ∪ new). With no touched files (an
+    empty root, or only new partitions) the batch alone is ranked. CAS
+    loss retries the whole merge against the new head (the read-set
+    must be re-resolved — this is serializable, not just atomic)."""
+    from ..operators.upsert import _keep_newest, _touched_partitions
 
     touched = {
-        str(r[0])
-        for r in incoming.select(
-            incoming[partition_col].cast("string")
-        ).distinct().collect()
+        _NULL_PART if v in (None, "") else v
+        for v in _touched_partitions(
+            incoming, incoming[partition_col].cast("string")
+        )
     }
-    w = Window.partitionBy(*key).orderBy(
-        F.col("_pri").desc(),
-        F.col(recency_col).desc(),
-        F.col(tie_col).desc(),
-    )
 
     def build(m):
         base = _files(m)
         carried = [f for f in base if _file_partition(f) not in touched]
         hot = [f for f in base if _file_partition(f) in touched]
-        unioned = incoming.withColumn("_pri", F.lit(1))
-        if hot:
-            existing_hot = _scan(spark, root, hot).select(*incoming.columns)
-            unioned = existing_hot.withColumn("_pri", F.lit(0)).unionByName(
-                unioned
-            )
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_pri", "_rn")
+        existing_hot = (
+            _scan(spark, root, hot).select(*incoming.columns) if hot else None
+        )
+        merged = _keep_newest(
+            existing_hot, incoming, key, recency_col, [tie_col]
         )
         return {
             "files": carried

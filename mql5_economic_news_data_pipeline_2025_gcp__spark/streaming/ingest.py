@@ -290,45 +290,33 @@ def stream_upsert_foreachbatch(
     sf_dir: str,
     target_dir: str,
     key=("user_id", "event_type", "event_date"),
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """The faithful streaming upsert (SURVEY §2.9): every micro-batch is
     MERGEd into the target table via ``foreachBatch`` — true
     update-in-place semantics per natural key, unlike dropDuplicates
     (which can only suppress, never update).
 
-    Each batch: read current target (if any) → union + keep-newest per
-    key (operators.upsert semantics) → atomic rewrite. At scale the
-    rewrite narrows to key-receiving partitions (month-partitioned
-    layout) or a real MERGE INTO on a Delta/Iceberg target; the
-    batch-function seam is identical. Returns the final target table.
+    Each batch commits through ``txn.merge_upsert`` on a table
+    partitioned by ``event_date``: keep-newest per key (``ts``, then
+    ``event_id``), rewriting only the days the batch touches, published
+    by one atomic commit. A replayed batch re-applies the same rows and
+    leaves the same table, so the sink is idempotent. The query is
+    stateless, so it needs no watermark. Returns the final target
+    table's snapshot.
     """
-    import os
-
-    from ..operators.upsert import upsert
-
     events = _events_stream(spark, sf_dir).withColumn(
         "event_date", F.to_date("ts")
     )
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        existing = (
-            spark.read.parquet(target_dir)
-            if os.path.exists(target_dir)
-            else None
+        txn.merge_upsert(
+            spark, target_dir, batch_df, key=list(key), recency_col="ts",
+            tie_col="event_id", partition_col="event_date",
         )
-        merged = upsert(existing, batch_df, key=key, recency_col="ts")
-        # write to a staging dir then swap: the read side above is the
-        # same path, so a direct overwrite would truncate its own input
-        staging = target_dir + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        final = spark.read.parquet(staging)
-        final.write.mode("overwrite").parquet(target_dir)
 
     with _state_partitions(spark, DEFAULT_STATE_PARTITIONS):
         q = (
-            events.withWatermark("ts", watermark)
-            .writeStream.foreachBatch(_merge)
+            events.writeStream.foreachBatch(_merge)
             .option("checkpointLocation", target_dir + ".checkpoint")
             .start()
         )
@@ -336,7 +324,7 @@ def stream_upsert_foreachbatch(
             q.processAllAvailable()
         finally:
             q.stop()
-    return spark.read.parquet(target_dir)
+    return txn.read(spark, target_dir)
 
 
 def stream_dedup_within_watermark(

@@ -7,6 +7,7 @@ natural-key upsert. Mirrors the reference's monthly push
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -361,6 +362,87 @@ def test_txn_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     a = sorted(tuple(r) for r in expect.collect())
     b = sorted(tuple(r) for r in got.collect())
     assert a == b
+
+
+def test_txn_merge_upsert_refuses_batch_over_partition_cap(
+    spark, tmp_path, monkeypatch
+):
+    """The touched-partition collect is capped: a batch spanning more
+    than MAX_BATCH_PARTITIONS values is a table, not a batch, and the
+    merge raises before writing or committing anything."""
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.operators import (
+        upsert as U,
+    )
+
+    monkeypatch.setattr(U, "MAX_BATCH_PARTITIONS", 3)
+    root = str(tmp_path / "tbl")
+    df = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") % 5).alias("p"), F.lit(0).alias("ts")
+    )
+    with pytest.raises(ValueError, match="distinct"):
+        txn.merge_upsert(spark, root, df, ["k"], "ts", "k", "p")
+    assert txn.versions(root) == []
+    assert not os.path.exists(root)
+
+
+def test_txn_merge_upsert_survives_cas_loss(spark, tmp_path, monkeypatch):
+    """Lost update under MERGE: a competing merge commits between this
+    merge's data write and its commit. The CAS loss makes the builder
+    re-rank against the winner's snapshot, so both batches' rows
+    survive, every key stays unique, and the later commit wins the keys
+    both batches carry."""
+    root = str(tmp_path / "race")
+
+    def batch(keys, v):
+        return spark.createDataFrame(
+            [(k, k % 4, v) for k in keys], "k long, p long, v long"
+        ).withColumn("ts", F.lit(v))
+
+    def merge(df):
+        return txn.merge_upsert(spark, root, df, ["k"], "ts", "v", "p")
+
+    assert merge(batch(range(0, 100), 0)) == 0
+    late = batch([*range(0, 10), *range(100, 150)], 1)
+    rival = batch([*range(5, 15), *range(200, 250)], 2)
+
+    real_write = txn._write_files_partitioned
+    calls = {"n": 0}
+
+    def racing_write(df, at, col):
+        calls["n"] += 1
+        if calls["n"] == 1:  # the late merge's first build: race it
+            assert merge(rival) == 1
+        return real_write(df, at, col)
+
+    monkeypatch.setattr(txn, "_write_files_partitioned", racing_write)
+    assert merge(late) == 2
+    assert calls["n"] == 3  # late build, rival build, late rebuild
+
+    got = {r["k"]: r["v"] for r in txn.read(spark, root).collect()}
+    assert txn.read(spark, root).count() == len(got) == 200
+    assert set(got) == {*range(0, 150), *range(200, 250)}
+    assert all(got[k] == 1 for k in [*range(0, 10), *range(100, 150)])
+    assert all(got[k] == 2 for k in [*range(10, 15), *range(200, 250)])
+    assert all(got[k] == 0 for k in range(15, 100))
+
+
+def test_txn_merge_upsert_null_and_escaped_partitions(spark, tmp_path):
+    """Partition values Spark does not write verbatim — null and empty
+    (``__HIVE_DEFAULT_PARTITION__``) and values it escapes in the path
+    (``:``) — still find their existing rows, so a re-published key
+    replaces its old version instead of duplicating it."""
+    root = str(tmp_path / "tbl")
+    parts = [None, "", "09:30", "a/b"]
+
+    def batch(v):
+        return spark.createDataFrame(
+            [(i, p, v) for i, p in enumerate(parts)], "k long, p string, v long"
+        )
+
+    txn.merge_upsert(spark, root, batch(0), ["k"], "v", "v", "p")
+    txn.merge_upsert(spark, root, batch(1), ["k"], "v", "v", "p")
+    got = sorted((r["k"], r["v"]) for r in txn.read(spark, root).collect())
+    assert got == [(i, 1) for i in range(len(parts))]
 
 
 def test_txn_data_skipping_and_exactly_once_sink(spark, tmp_path):

@@ -1418,37 +1418,21 @@ def test_series_mad_udaf_matches_fast(spark):
     assert udaf == fast and len(fast) > 0
 
 
-def _file_digests(path):
-    import hashlib
-    import os
-
-    out = {}
-    for root, _, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, path)] = hashlib.md5(
-                        fh.read()
-                    ).hexdigest()
-    return out
-
-
 def test_merge_upsert_partition_pruned(spark, tmp_path):
-    """Write-side S9 merge: applying an incremental batch must leave
-    every untouched partition's files BYTE-IDENTICAL (no rewrite), while
-    touched partitions get keep-newest-per-key — and the resulting table
-    must equal the relational merge core run over the same inputs."""
+    """Write-side S9 merge: ``txn.merge_upsert`` applies an incremental
+    batch to a partitioned txn table, carrying every untouched
+    partition's files BY REFERENCE (no rewrite) while touched partitions
+    get keep-newest-per-key — and the committed table must equal the
+    relational merge core run over the same inputs."""
+    from collections import Counter
+
     from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.upsert import (
         merge_upsert_partitioned,
-        merge_upsert_to_path,
     )
     from mql5_economic_news_data_pipeline_2025_gcp__spark.plans.common import (
         keyed_events,
     )
-    from mql5_economic_news_data_pipeline_2025_gcp__spark.sources.sinks import (
-        save_partitioned,
-    )
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.sources import txn
 
     base = keyed_events(spark, "/root/testdata/sf0.001").withColumn(
         "event_date", F.to_date("ts")
@@ -1462,71 +1446,64 @@ def test_merge_upsert_partition_pruned(spark, tmp_path):
         .select("event_id", "ts", "user_id", "event_type", "event_date", "value_c")
     )
 
-    path = str(tmp_path / "events_by_day")
-    save_partitioned(existing, path, partition_cols=("event_date",))
-    before = _file_digests(path)
-
-    touched = merge_upsert_to_path(
-        spark,
-        path,
-        incoming,
-        key=("user_id", "event_type", "event_date"),
-        recency_col="ts",
-        tie_cols=("event_id",),
-        partition_col="event_date",
+    # seed the table with ``existing`` verbatim (duplicate keys included),
+    # laid out by partition the way merge_upsert writes
+    root = str(tmp_path / "events_by_day")
+    v0 = txn._commit(
+        root,
+        "overwrite",
+        lambda m: {
+            "files": txn._write_files_partitioned(existing, root, "event_date")
+        },
     )
-    after = _file_digests(path)
+    m0 = set(txn._read_manifest(root, v0)["files"])
 
-    touched_dirs = {f"event_date={v}" for v in touched}
-    untouched_before = {
-        f: h
-        for f, h in before.items()
-        if f.split("/", 1)[0] not in touched_dirs
-    }
-    untouched_after = {
-        f: h
-        for f, h in after.items()
-        if f.split("/", 1)[0] not in touched_dirs
-    }
-    assert untouched_before and untouched_before == untouched_after
+    key = ["user_id", "event_type", "event_date"]
+    v1 = txn.merge_upsert(
+        spark, root, incoming, key, "ts", "event_id", "event_date"
+    )
+    m1 = set(txn._read_manifest(root, v1)["files"])
 
-    expect, _ = merge_upsert_partitioned(
+    expect, touched = merge_upsert_partitioned(
         existing,
         incoming,
-        key=("user_id", "event_type", "event_date"),
+        key=key,
         recency_col="ts",
         tie_cols=("event_id",),
         partition_col="event_date",
     )
+    touched = {str(v) for v in touched}
+    untouched = {f for f in m0 if txn._file_partition(f) not in touched}
+    assert untouched and untouched <= m1
+    assert not (m0 - untouched) & m1
+
     cols = ["user_id", "event_type", "event_date", "event_id", "value_c"]
-    got = {tuple(r) for r in spark.read.parquet(path).select(*cols).collect()}
-    want = {tuple(r) for r in expect.select(*cols).collect()}
+    got = Counter(tuple(r) for r in txn.read(spark, root).select(*cols).collect())
+    want = Counter(tuple(r) for r in expect.select(*cols).collect())
     assert got == want
 
 
-def test_merge_upsert_batch_partition_cap(spark):
+def test_merge_upsert_batch_partition_cap(spark, monkeypatch):
     """A 'batch' touching more partitions than MAX_BATCH_PARTITIONS is a
     miswired full-table load — the merge must refuse, not collect it."""
     import pytest
 
     from mql5_economic_news_data_pipeline_2025_gcp__spark.operators import upsert as U
 
+    monkeypatch.setattr(U, "MAX_BATCH_PARTITIONS", 10)
     df = spark.range(20).select(
         F.col("id").alias("k"), F.col("id").alias("p"), F.col("id").alias("ts2")
     )
     with pytest.raises(ValueError, match="distinct"):
         U.merge_upsert_partitioned(
-            df, df, key=("k",), recency_col="ts2", partition_col="p",
-            max_partitions=10,
+            df, df, key=("k",), recency_col="ts2", partition_col="p"
         )
 
 
 def test_merge_upsert_first_write(spark, tmp_path):
-    """First write (table absent): the batch itself is deduped per key
+    """First write (empty root): the batch itself is deduped per key
     (newest wins) and lands partitioned."""
-    from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.upsert import (
-        merge_upsert_to_path,
-    )
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.sources import txn
 
     d = datetime.date(2025, 3, 1)
     df = spark.createDataFrame(
@@ -1537,21 +1514,15 @@ def test_merge_upsert_first_write(spark, tmp_path):
         ],
         "event_id long, ts timestamp, k string, event_date date, value_c long",
     )
-    path = str(tmp_path / "t")
-    merge_upsert_to_path(
-        spark,
-        path,
-        df,
-        key=("k", "event_date"),
-        recency_col="ts",
-        tie_cols=("event_id",),
-        partition_col="event_date",
+    root = str(tmp_path / "t")
+    v = txn.merge_upsert(
+        spark, root, df, ["k", "event_date"], "ts", "event_id", "event_date"
     )
-    rows = {
-        (r["k"], r["value_c"])
-        for r in spark.read.parquet(path).collect()
-    }
+    assert v == 0
+    rows = {(r["k"], r["value_c"]) for r in txn.read(spark, root).collect()}
     assert rows == {("USD", 20), ("EUR", 30)}
+    parts = {txn._file_partition(f) for f in txn._read_manifest(root, 0)["files"]}
+    assert parts == {"2025-03-01", "2025-03-02"}
 
 
 def test_bounded_collect_guards_fit_paths(spark):

@@ -79,3 +79,35 @@ def test_pack_sequences_single_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Exchange rangepartitioning" not in plan, plan
     assert "Exchange SinglePartition" not in plan, plan
+
+
+def test_no_session_partition_overwrite_toggle():
+    """Dynamic partition overwrite is a per-write option
+    (``.option("partitionOverwriteMode", "dynamic")``), never a
+    ``spark.conf.set`` on the session: a session-wide toggle is visible
+    to every other thread sharing the session (the serving layer's
+    HTTP handlers included) and goes stale if a restore is skipped."""
+    import ast
+    import pathlib
+
+    import mql5_economic_news_data_pipeline_2025_gcp__spark as pkg
+
+    offenders = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+            ):
+                continue
+            if any(
+                isinstance(a, ast.Constant)
+                and isinstance(a.value, str)
+                and "partitionOverwriteMode" in a.value
+                for a in ast.walk(node)
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders
