@@ -323,141 +323,169 @@ def jaccard_pairs(
 
 # ------------------------------------------------- dedup clustering (CC)
 
+#: Candidate-pair count at or below which :func:`dedup_clusters` and
+#: :func:`dupgraph_hops` finish the graph in one Python worker instead
+#: of distributed rounds. This is a memory bound, not a measured
+#: crossover. The BFS holds ~250 bytes of Python heap per pair
+#: (adjacency dict of lists plus the hop dict), so ~25 MB here and
+#: ~256 MB at 1e6 pairs. The union-find holds ~120 bytes per pair (one
+#: parent dict: tracemalloc peaked at 11.9 MB for 1e5 random pairs over
+#: 1e5 ids).
+#: On random pair sets in one local[4] JVM the local BFS still used
+#: less CPU than the rounds at 1e6 pairs (8.0 vs 28.1 s; 1.4 vs 3.9 s
+#: at 1e5), but it runs on one core, so its wall time grows fastest
+#: (6.8 vs 10.7 s at 1e6).
+LOCAL_GRAPH_MAX_PAIRS = 100_000
+
+#: Round cap of :func:`dedup_clusters`' large/small-star loop. The loop
+#: takes O(log n) rounds; an edge set still changing at the cap raises.
+STAR_MAX_ROUNDS = 30
+
+
+def _local_components(batches):
+    """mapInPandas body of :func:`dedup_clusters`' local path: a
+    union-find that always hangs the larger root under the smaller, so
+    every root is its component's minimum."""
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for pdf in batches:
+        for a, b in zip(pdf["id_a"].tolist(), pdf["id_b"].tolist()):
+            ra = find(parent.setdefault(a, a))
+            rb = find(parent.setdefault(b, b))
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    yield pd.DataFrame(
+        {"node": nodes, "label": [find(v) for v in nodes]}, dtype="int64"
+    )
+
+
+def _star_components(edges: DataFrame) -> DataFrame:
+    """Distributed path of :func:`dedup_clusters`: alternating
+    large-star / small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") → (node, label).
+
+    large-star: every node connects its strictly-larger neighbors to
+    the minimum of its closed neighborhood; small-star does the same
+    for smaller-or-equal neighbors. Each is one groupBy + one equi-join
+    over the EDGE set (which shrinks toward stars), and the rounds are
+    O(log n) where min-label propagation needs O(diameter). Each round
+    is checkpointed, so the plan does not grow with the round count;
+    convergence = edge set stable, checked via an order-insensitive
+    hash sum (one ``first()`` per round).
+    """
+
+    def _sig(df: DataFrame) -> int:
+        # order-insensitive edge-set signature (canonical orientation)
+        a = F.least("u", "v")
+        b = F.greatest("u", "v")
+        return (
+            df.select(F.xxhash64(a, b).cast("decimal(38,0)").alias("h"))
+            .agg(F.sum("h"))
+            .first()[0]
+            or 0
+        )
+
+    def _large_star(ed: DataFrame) -> DataFrame:
+        adj = ed.unionByName(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        m = adj.groupBy("u").agg(F.min("v").alias("mn"))
+        m = m.select("u", F.least("mn", F.col("u")).alias("mn"))
+        j = adj.join(m, "u")
+        return (
+            j.filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+
+    def _small_star(ed: DataFrame) -> DataFrame:
+        # orient every edge from its larger endpoint
+        o = ed.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+        m = o.groupBy("u").agg(F.min("v").alias("mn"))
+        j = o.join(m, "u")
+        out = j.select(F.col("v").alias("u"), F.col("mn").alias("v")).unionByName(
+            m.select("u", F.col("mn").alias("v"))
+        )
+        return out.filter(F.col("u") != F.col("v")).distinct()
+
+    e = (
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    prev = _sig(e)
+    for _ in range(STAR_MAX_ROUNDS):
+        # lazy checkpoint — materialized by the _sig action (one job
+        # per round instead of two), lineage cut is identical
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        cur = _sig(e)
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise RuntimeError(
+            f"dedup_clusters: the large/small-star edge set still changed "
+            f"after STAR_MAX_ROUNDS={STAR_MAX_ROUNDS} rounds"
+        )
+    # post-convergence the edge set is a union of stars oriented
+    # (member -> center); the center is the component minimum
+    return e.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("label"))
+
 
 def dedup_clusters(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 20,
+    pairs: DataFrame, nodes: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Connected components over near-dup candidate pairs → cluster id =
-    min doc id in the component (the canonical survivor). The iterative
-    step LSH/Jaccard feed into: pairs only say "these two are similar";
-    clustering turns that into dedup groups.
+    """Connected components over near-dup candidate pairs (id_a, id_b
+    bigint) → (``id_col``, cluster_id) for every row of ``nodes``, with
+    cluster id = min id in the component (the canonical survivor). The
+    iterative step LSH/Jaccard feed into: pairs only say "these two are
+    similar"; clustering turns that into dedup groups.
 
-    Iterative min-label propagation WITH one pointer-jump per round:
-    each round every node takes the min label among itself and its
-    neighbors (one equi-join + min-agg), then labels are compressed one
-    hop — ``label = label(label)`` via a self-join — valid because
-    labels only ever decrease, so ``label(label(x)) ≤ label(x)`` stays
-    inside the component. The single jump is a constant-factor round
-    reduction (labels move ~3 hops/round on chains instead of 1), NOT
-    asymptotic: long-diameter graphs still need O(diameter/3) rounds
-    (measured: 10 rounds on the chain-like embedding graph at sf0.1).
-    Use this for the shallow star/clique graphs text near-dup
-    produces; use :func:`dedup_clusters_star` (O(log n) rounds,
-    measured 4 on the same graph) when components can be long chains.
+    The pairs are projected to (id_a, id_b), lazily checkpointed and
+    counted once; the count picks the path.
 
-    Scale shape per round: two equi-joins + one min-agg, all shuffling
-    on node id, AQE-coalesced. Labels are checkpointed every round
-    (localCheckpoint) so the plan does not grow with iteration count;
-    convergence is detected via the label sum, which strictly decreases
-    until fixpoint (labels only ever decrease). Fixpoint output is
-    iteration-order independent → deterministic.
+    - At most :data:`LOCAL_GRAPH_MAX_PAIRS` pairs: one ``coalesce(1)
+      .mapInPandas`` union-find pass. It runs no job until the result
+      is read; each distributed round below launches jobs while the
+      plan is built.
+    - Above it, the large/small-star rounds of :func:`_star_components`,
+      the only path for a graph one worker cannot hold.
+
+    Only edge-touched nodes are labelled; every other node rejoins as
+    its own singleton cluster in one left join. The component minimum
+    does not depend on edge order, so both paths give the same,
+    deterministic labelling.
+
+    TRADE (§5): ``localCheckpoint`` blocks live in executor storage —
+    on a cluster with executor loss / dynamic allocation the truncated
+    lineage is unrecoverable and the job fails; use reliable
+    ``checkpoint()`` to a checkpoint dir there.
     """
-    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = (
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    edges = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    if edges.count() <= LOCAL_GRAPH_MAX_PAIRS:
+        labels = edges.coalesce(1).mapInPandas(
+            _local_components, schema="node long, label long"
         )
-        .distinct()
-        # localCheckpoint, NOT persist: persist caches the DATA but
-        # keeps the full candidate-generation lineage (LSH chain) in
-        # the LOGICAL plan, so every round's three edge joins re-embed
-        # and re-analyze that whole tree — measured ~0.6 s/round of
-        # pure plan-building at sf0.1 (r13). The checkpoint truncates
-        # the plan to an RDD scan (and locally persists the RDD, same
-        # data reuse as persist); lazy, so the round-1 convergence
-        # action materializes it — no extra pre-loop job.
-        # TRADE (§5): localCheckpoint blocks live in EXECUTOR storage —
-        # on a cluster with executor loss / dynamic allocation the
-        # truncated lineage is unrecoverable and the job fails; use
-        # reliable checkpoint() to a checkpoint dir there. Cleanup
-        # relies on ContextCleaner GC (fine for short-lived sessions).
-        .localCheckpoint(eager=False)
-    )
-    # iterate ONLY over edge-touched nodes: an isolated node's label is
-    # itself by definition and can never change, so it has no business
-    # inside the loop. Under LSH-candidate sparsity touched ≪ corpus
-    # (near-dups are the exception, not the rule), which turns each
-    # round's joins from |corpus|-sized to |touched|-sized — at 100 TB
-    # this is the difference between iterating over the corpus 10×
-    # and iterating over a few percent of it. Isolated nodes rejoin as
-    # their own singleton cluster at the end (one left join, outside
-    # the loop).
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        # lazy: round 0's convergence action materializes it — no
-        # pre-loop job just to snapshot the (trivially known) identity
-        # labeling; prev_sum starts unknown and round 0 always runs
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = None
-    for _ in range(max_iter):
-        # min over the CLOSED neighborhood in ONE aggregate: neighbor
-        # labels (edges⋈labels) unioned with each node's own label row,
-        # then a single min-agg — replaces the old groupBy + left-join
-        # (min over neighbors, then least(own, nbr)), which cost one
-        # extra shuffle of |touched| rows per round (guide §2.4). Same
-        # update rule: min(own ∪ neighbors) ≡ least(own, min(neighbors)).
-        nbr_rows = edges.join(labels, edges.dst == labels.node).select(
-            "src", "label"
-        )
-        own_rows = labels.select(F.col("node").alias("src"), "label")
-        stepped = (
-            nbr_rows.unionByName(own_rows)
-            .groupBy("src")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("src").alias("node"), "label")
-        )
-        # pointer jumping: follow the label's own label (labels only
-        # decrease, so this stays within the component and can only
-        # tighten toward the component minimum)
-        l2 = stepped.select(
-            F.col("node").alias("pnode"), F.col("label").alias("plabel")
-        )
-        labels = (
-            stepped.join(l2, stepped.label == l2.pnode, "left")
-            .select(
-                "node",
-                F.coalesce("plabel", "label").alias("label"),
-            )
-            # lazy checkpoint: the convergence-sum action right below
-            # materializes it, so each round costs ONE job, not two
-            # (eager checkpoint + sum) — measured ~0.3 s/round of fixed
-            # job overhead saved locally; the cut lineage is identical
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # (checkpointed edge RDD blocks are reclaimed by the ContextCleaner
-    # when the frame goes out of scope — same lifecycle as the per-round
-    # label checkpoints; there is no cache entry to unpersist)
-    return (
-        nodes.select(F.col(id_col))
-        .join(labels, nodes[id_col] == labels.node, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
-        )
+    else:
+        labels = _star_components(edges)
+    ids = nodes.select(F.col(id_col))
+    return ids.join(labels, ids[id_col] == labels["node"], "left").select(
+        F.col(id_col),
+        F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
     )
 
 
 # ----------------------------------------------------- dup-graph BFS
-
-#: Candidate-pair count at or below which :func:`dupgraph_hops` walks
-#: the graph in one Python worker instead of distributed rounds. This
-#: is a memory bound, not a measured crossover. The local pass holds
-#: ~250 bytes of Python heap per pair (adjacency dict of lists plus the
-#: hop dict), so ~25 MB here and ~256 MB at 1e6 pairs. On random pair
-#: sets in one local[4] JVM it still used less CPU than the rounds at
-#: 1e6 pairs (8.0 vs 28.1 s; 1.4 vs 3.9 s at 1e5), but it runs on one
-#: core, so its wall time grows fastest (6.8 vs 10.7 s at 1e6).
-BFS_LOCAL_MAX_PAIRS = 100_000
 
 #: Hop cap of :func:`dupgraph_hops`. It must match the recursive CTE of
 #: the ``doc_dupgraph_bfs`` oracle (``dist < 3``), which it also keeps
@@ -500,7 +528,7 @@ def dupgraph_hops(pairs: DataFrame) -> DataFrame:
     ``pairs`` must be materialized (checkpointed): it is counted once
     here and read again by the path the count picks.
 
-    - At most :data:`BFS_LOCAL_MAX_PAIRS` pairs: one ``coalesce(1)
+    - At most :data:`LOCAL_GRAPH_MAX_PAIRS` pairs: one ``coalesce(1)
       .mapInPandas`` pass. It adds no exchange and runs no job until the
       result is read; the distributed rounds below each launch jobs
       while the plan is built (a lazy ``localCheckpoint`` over shuffles
@@ -508,12 +536,12 @@ def dupgraph_hops(pairs: DataFrame) -> DataFrame:
     - Above it, :data:`BFS_MAX_HOPS` synchronous rounds: each is an
       edge join keyed on the node id followed by a min-dist aggregate
       on the same key — one co-partitioned shuffle per round — and a
-      ``localCheckpoint`` truncates the lineage as the CC operators do.
+      ``localCheckpoint`` truncates the lineage as the CC kernel does.
       Each round re-expands the full distance table rather than keeping
       a frontier frame: at 3 rounds that costs less than the extra
       anti-join a frontier needs.
     """
-    if pairs.count() <= BFS_LOCAL_MAX_PAIRS:
+    if pairs.count() <= LOCAL_GRAPH_MAX_PAIRS:
         return pairs.select("id_a", "id_b").coalesce(1).mapInPandas(
             _local_hops, schema="doc_id long, hops long"
         )
@@ -581,88 +609,3 @@ def simhash(
     ).groupBy(id_col).agg(F.sum("bitval").alias("simhash"))
     return sig
 
-
-def dedup_clusters_star(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round algorithm for graphs whose components may have
-    LONG diameter (e.g. embedding near-dup graphs, where bucket
-    subgraphs are tree-like chains; min-label propagation needs
-    O(diameter) rounds there, measured 10 rounds vs 4 for this).
-
-    large-star: every node connects its strictly-larger neighbors to
-    the minimum of its closed neighborhood; small-star does the same
-    for smaller-or-equal neighbors. Both are one groupBy + one
-    broadcast-free equi-join per pass over the EDGE set (which shrinks
-    toward stars), not the node set. Convergence = edge multiset stable
-    (checked via an order-insensitive hash sum). Output: node →
-    component minimum, identical to :func:`dedup_clusters`.
-    """
-    e = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).filter(
-        F.col("u") != F.col("v")
-    )
-    # lazy: the baseline _sig action right below materializes it —
-    # one job instead of two before the loop starts
-    edges = e.distinct().localCheckpoint(eager=False)
-
-    def _sig(df: DataFrame) -> int:
-        # order-insensitive edge-set signature (canonical orientation)
-        a = F.least("u", "v")
-        b = F.greatest("u", "v")
-        return (
-            df.select(F.xxhash64(a, b).cast("decimal(38,0)").alias("h"))
-            .agg(F.sum("h"))
-            .first()[0]
-            or 0
-        )
-
-    def _large_star(ed: DataFrame) -> DataFrame:
-        adj = ed.unionByName(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = adj.groupBy("u").agg(F.min("v").alias("mn"))
-        m = m.select("u", F.least("mn", F.col("u")).alias("mn"))
-        j = adj.join(m, "u")
-        return (
-            j.filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(ed: DataFrame) -> DataFrame:
-        # orient every edge from its larger endpoint
-        o = ed.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = o.groupBy("u").agg(F.min("v").alias("mn"))
-        j = o.join(m, "u")
-        out = j.select(F.col("v").alias("u"), F.col("mn").alias("v")).unionByName(
-            m.select("u", F.col("mn").alias("v"))
-        )
-        return out.filter(F.col("u") != F.col("v")).distinct()
-
-    prev = _sig(edges)
-    for _ in range(max_iter):
-        # lazy checkpoint — materialized by the _sig action (one job
-        # per round instead of two), lineage cut is identical
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        cur = _sig(edges)
-        if cur == prev:
-            break
-        prev = cur
-
-    # post-convergence the edge set is a union of stars oriented
-    # (member -> center); attach centers/singletons to themselves
-    members = edges.groupBy("u").agg(F.min("v").alias("cluster_id"))
-    return (
-        nodes.select(F.col(id_col).alias("u"))
-        .join(members, "u", "left")
-        .select(
-            F.col("u").alias(id_col),
-            F.coalesce("cluster_id", F.col("u")).alias("cluster_id"),
-        )
-    )

@@ -42,12 +42,6 @@ def _as_double(c: Column) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def _lit_vec(cv: list[float]) -> Column:
-    # one nested-list literal = one py4j call; F.array(*[F.lit(x) ...])
-    # costs a JVM round-trip per element (hundreds per vector)
-    return F.lit([float(x) for x in cv])
-
-
 def cell_sims_lit(
     vec: Column, cents: list[tuple[int, list[float]]], round_digits: int = 6
 ) -> Column:

@@ -82,19 +82,6 @@ def fingerprint(text_col: Column | str) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
 
 
-def document_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis profile to each document."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(text_col), 6))
-        .withColumn("mean_word_len", F.round(mean_word_len(text_col), 6))
-        .withColumn("punct_ratio", F.round(punct_ratio(text_col), 6))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("pred_lang", predict_lang(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
-    )
-
-
 def corpus_verdict(
     text_col: Column | str = "text", lang_col: Column | str = "lang"
 ) -> Column:

@@ -20,7 +20,7 @@ evaluation order, so the differential gate holds bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -93,8 +93,3 @@ STUB_TREES = [
     },
 ]
 
-
-def score_with_stub_ensemble(df: DataFrame, out_col: str = "score") -> DataFrame:
-    return df.withColumn(
-        out_col, compile_ensemble(STUB_TREES, learning_rate=0.5, base_score=100.0)
-    )

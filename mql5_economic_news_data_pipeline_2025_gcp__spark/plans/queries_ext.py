@@ -654,8 +654,9 @@ def mm_media_features(spark, sf_dir):
     """,
     description=(
         "iterative connected-components dedup clustering over MinHash-LSH "
-        "candidate pairs: min-label propagation to fixpoint (checkpointed "
-        "per round, O(diameter) rounds); cluster id = canonical min doc"
+        "candidate pairs: one union-find pass over the counted pair set "
+        "(large/small-star rounds above the local-graph bound); "
+        "cluster id = canonical min doc"
     ),
     tags=("documents", "dedup", "iterative"),
 )
@@ -1755,18 +1756,14 @@ def stream_corpus_filter(spark, sf_dir):
     tags=("embeddings", "dedup", "iterative"),
 )
 def emb_dedup_clusters(spark, sf_dir):
-    # star CC, not min-propagation: bucket subgraphs here are tree-like
-    # chains (long diameter), where propagation needs O(diameter)
-    # rounds (measured 10) and the large/small-star form needs O(log n)
-    # (measured 4)
-    from ..operators.dedup import dedup_clusters_star
+    from ..operators.dedup import dedup_clusters
     from ..operators.similarity import near_dup_pairs_cosine
 
     emb = fan_out(spark, t(spark, sf_dir, "embeddings"))
     pairs = near_dup_pairs_cosine(
         emb, threshold=0.3, id_col="vec_id", vec_col="embedding"
     ).select("id_a", "id_b")
-    clusters = dedup_clusters_star(pairs, emb, id_col="vec_id")
+    clusters = dedup_clusters(pairs, emb, id_col="vec_id")
     sized = clusters.groupBy(
         F.col("cluster_id").cast("bigint").alias("cluster_id")
     ).agg(F.count(F.lit(1)).alias("n_members"))

@@ -917,13 +917,16 @@ def doc_corpus_overlap(spark, sf_dir):
     pres = sh.groupBy("shingle").agg(
         F.sort_array(F.collect_set("source")).alias("srcs")
     )
+    # the posting-list size is projected below the lambda, which would
+    # otherwise recompute it once per element
     pair_expr = (
         "flatten(transform(srcs, (a, i) -> "
-        "transform(slice(srcs, i + 2, size(srcs)), "
+        "transform(slice(srcs, i + 2, n_srcs), "
         "b -> struct(a AS src_a, b AS src_b))))"
     )
     inter = (
-        pres.select(F.explode(F.expr(pair_expr)).alias("p"))
+        pres.select("srcs", F.size("srcs").alias("n_srcs"))
+        .select(F.explode(F.expr(pair_expr)).alias("p"))
         .select("p.src_a", "p.src_b")
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).alias("c"))

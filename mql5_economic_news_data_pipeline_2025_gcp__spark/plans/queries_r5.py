@@ -796,9 +796,8 @@ def doc_ppl_buckets(spark, sf_dir):
         "a fat tail here means the LSH bands are too loose or the "
         "corpus has a template problem). Composes the existing "
         "LSH → connected-components chain and adds two tiny aggregates "
-        "over the |clusters| frame; the iterative CC is the only "
-        "corpus-scale stage and it is the checkpointed O(diameter) "
-        "round loop from operators.dedup"
+        "over the |clusters| frame; the CC kernel from operators.dedup "
+        "is the only graph stage"
     ),
     tags=("documents", "dedup", "evaluation"),
 )

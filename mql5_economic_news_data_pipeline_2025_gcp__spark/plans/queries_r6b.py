@@ -4412,8 +4412,9 @@ def doc_dupgraph_bfs(spark, sf_dir):
 
     The pairs are checkpointed eagerly and counted once, and the count
     picks the path (:func:`..operators.dedup.dupgraph_hops`):
-    - at most ``BFS_LOCAL_MAX_PAIRS`` pairs (every registry scale
-      factor: 32 pairs at sf0.01, 829 at sf0.1), one single-partition
+    - at most ``LOCAL_GRAPH_MAX_PAIRS`` pairs (the bound it shares
+      with ``dedup_clusters``; every registry scale factor is below
+      it: 32 pairs at sf0.01, 829 at sf0.1), one single-partition
       pandas BFS. It adds no exchange and runs no Spark job while the
       plan is built; three checkpointed rounds would launch about
       twelve there to walk a graph one worker holds in well under a MB;

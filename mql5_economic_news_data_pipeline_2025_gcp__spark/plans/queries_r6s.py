@@ -216,15 +216,16 @@ def evt_fdr_bh(spark, sf_dir):
         f" 's_g', s_{g}, 't_obs', {t_stat(f'n_{g}', f's_{g}')})"
         for g, et in enumerate(_TYPES)
     )
+    # inline (not explode + x.field): t_obs arrives as a column, so the
+    # filter lambda does not re-read the struct field per element
     hyp = c.selectExpr(
         f"{tnull_sql} AS tnull",
-        f"explode(array({hyp_structs_sql})) AS x",
+        f"inline(array({hyp_structs_sql}))",
     ).selectExpr(
-        "x.event_type AS event_type",
-        "x.n_g AS n_g",
-        "x.s_g AS s_g",
-        "CAST(size(filter(tnull, t -> t >= x.t_obs)) AS BIGINT)"
-        " AS ge_count",
+        "event_type",
+        "n_g",
+        "s_g",
+        "CAST(size(filter(tnull, t -> t >= t_obs)) AS BIGINT) AS ge_count",
     )
     ranked = hyp.withColumn(
         "rk",

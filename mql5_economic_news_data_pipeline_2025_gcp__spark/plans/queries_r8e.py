@@ -200,10 +200,8 @@ def doc_dupgraph_modularity(spark, sf_dir):
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    # iterative min-label CC: the doc candidate graph is shallow
-    # star/clique shaped, where min-label converges in ~3 rounds and
-    # BEATS star-contraction (measured 5.1 s vs 5.6 s at sf0.1 — the
-    # trade documented on the operators themselves)
+    # the candidate graph is far below dedup.LOCAL_GRAPH_MAX_PAIRS at
+    # every registry scale, so the labels come from one union-find pass
     labels = dedup_clusters(pairs, touched).localCheckpoint()
     edges = pairs.unionByName(
         pairs.select(

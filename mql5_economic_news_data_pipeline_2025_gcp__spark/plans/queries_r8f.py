@@ -88,7 +88,10 @@ def doc_span_corruption(spark, sf_dir):
         "filter(split(regexp_replace(lower(trim(text)), '\\\\s+', ' '), ' '),"
         " w -> w <> '')"
     )
-    base = docs.select("doc_id", tk.alias("tk"))
+    # the doc-id string is per row: projected here, not re-cast per token
+    base = docs.select(
+        "doc_id", tk.alias("tk"), F.col("doc_id").cast("string").alias("did")
+    )
     idx = F.sequence(F.lit(1), F.size("tk"))
     trig = F.transform(
         idx,
@@ -96,7 +99,7 @@ def doc_span_corruption(spark, sf_dir):
             F.substring(
                 F.md5(
                     F.concat(
-                        F.col("doc_id").cast("string"),
+                        F.col("did"),
                         F.lit(":"),
                         i.cast("string"),
                     )

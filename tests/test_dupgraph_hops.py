@@ -1,7 +1,7 @@
 """``operators.dedup.dupgraph_hops``: multi-source BFS hop distances
 over a pair graph, checked against hand-computed hops on both paths —
 the single-partition pandas pass (the default at test scale) and the
-distributed rounds, forced by lowering ``BFS_LOCAL_MAX_PAIRS``."""
+distributed rounds, forced by lowering ``LOCAL_GRAPH_MAX_PAIRS``."""
 
 from __future__ import annotations
 
@@ -31,7 +31,7 @@ CASES = {
 @pytest.fixture(params=["local", "distributed"])
 def path(request, monkeypatch):
     if request.param == "distributed":
-        monkeypatch.setattr(dedup, "BFS_LOCAL_MAX_PAIRS", -1)
+        monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_PAIRS", -1)
     return request.param
 
 

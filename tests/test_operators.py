@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
+from mql5_economic_news_data_pipeline_2025_gcp__spark.operators import dedup
 from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.upsert import upsert
 from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.features import (
     with_filled,
@@ -355,17 +357,26 @@ def test_series_trend_fast_matches_grouped_map(spark):
     assert a == b and len(a) > 0
 
 
-def test_dedup_clusters_chain_and_singleton(spark):
-    from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.dedup import (
-        dedup_clusters,
-    )
+@pytest.fixture(params=["local", "distributed"])
+def cc_path(request, monkeypatch):
+    """Both paths of ``dedup.dedup_clusters``: the union-find pass (the
+    default at test scale) and the large/small-star rounds, forced by
+    lowering ``LOCAL_GRAPH_MAX_PAIRS``."""
+    if request.param == "distributed":
+        monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_PAIRS", -1)
+    return request.param
 
+
+def test_dedup_clusters_chain_and_singleton(spark, cc_path):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 7, 9)], "doc_id long")
-    out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs, nodes).collect()}
-    # chain 1-2-3 collapses to min id 1 (requires >1 propagation round)
+    out = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dedup_clusters(pairs, nodes).collect()
+    }
+    # chain 1-2-3 collapses to min id 1; 5 has no edge and stays alone
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 9: 7}
 
 
@@ -722,16 +733,11 @@ def test_dtw_matches_reference(spark):
     assert checked == 10
 
 
-def test_star_cc_matches_union_find(spark):
-    """dedup_clusters_star must produce identical components to a
-    driver-side union-find on randomized graphs (chains, stars, cliques,
-    singletons) — and to the min-propagation operator."""
+def test_star_cc_matches_union_find(spark, cc_path):
+    """dedup_clusters must produce identical components to a
+    driver-side union-find on randomized graphs (long chains, stars,
+    cliques, disjoint components, singletons) on both paths."""
     import random
-
-    from mql5_economic_news_data_pipeline_2025_gcp__spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
 
     rng = random.Random(7)
     for trial in range(3):
@@ -766,16 +772,24 @@ def test_star_cc_matches_union_find(spark):
             [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
         )
         nodes = spark.range(n).withColumnRenamed("id", "doc_id")
-        got_star = {
+        got = {
             r["doc_id"]: r["cluster_id"]
-            for r in dedup_clusters_star(pairs, nodes).collect()
+            for r in dedup.dedup_clusters(pairs, nodes).collect()
         }
-        assert got_star == expected, f"trial {trial}: star CC mismatch"
-        got_prop = {
-            r["doc_id"]: r["cluster_id"]
-            for r in dedup_clusters(pairs, nodes).collect()
-        }
-        assert got_prop == expected, f"trial {trial}: propagation CC mismatch"
+        assert got == expected, f"trial {trial}: {cc_path} CC mismatch"
+
+
+def test_dedup_clusters_raises_when_rounds_run_out(spark, monkeypatch):
+    """A star loop still changing at its round cap must fail loudly,
+    not hand back a half-contracted labelling."""
+    monkeypatch.setattr(dedup, "LOCAL_GRAPH_MAX_PAIRS", -1)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "id_a long, id_b long"
+    )
+    nodes = spark.range(20).withColumnRenamed("id", "doc_id")
+    with pytest.raises(RuntimeError, match="STAR_MAX_ROUNDS"):
+        dedup.dedup_clusters(pairs, nodes).collect()
 
 
 def test_dtw_fast_matches_grouped(spark):

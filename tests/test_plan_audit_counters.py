@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(
@@ -135,3 +136,13 @@ def test_lambda_invariant_negative_control(spark):
         (2, "x y z"),
     ]
     assert lambda_invariant_exprs(df) == 0
+
+
+@pytest.mark.parametrize(
+    "name", ["doc_corpus_overlap", "doc_span_corruption", "evt_fdr_bh"]
+)
+def test_lambda_invariants_hoisted(spark, name):
+    """Each of these once read a per-row value inside a per-element
+    lambda (``size(srcs)``, ``cast(doc_id as string)``, ``x.t_obs``);
+    the value is now a column projected below the lambda."""
+    assert lambda_invariant_exprs(REGISTRY[name].spark_fn(spark, SF)) == 0

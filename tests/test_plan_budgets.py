@@ -637,8 +637,15 @@ def test_scan_budget(spark, name):
 JOB_BUDGETS = {
     # eager pair checkpoint + one pair count + the single-partition BFS
     # collect; one more on a cold session (the documents schema read).
-    # The three checkpointed distributed BFS rounds would launch 17.
+    # At or below dedup.LOCAL_GRAPH_MAX_PAIRS, the bound it shares with
+    # dedup_clusters; the three checkpointed distributed BFS rounds
+    # would launch 17.
     "doc_dupgraph_bfs": 8,
+    # CC kernel, same rule: measured warm build + collect at sf0.001
+    # (the pair count plus one union-find pass) plus one for a cold
+    # session. The checkpointed CC rounds ran 24 and 48 cold.
+    "doc_dedup_clusters": 11,
+    "emb_dedup_clusters": 11,
 }
 
 
