@@ -348,10 +348,10 @@ def evt_permutation_test(spark, sf_dir):
     # 132 aggregate cells > the default 100-field codegen limit: build
     # on the maxFields=256 CHILD session so this one stage compiles
     # (measured −36% r13) without the global raise's suite-wide codegen
-    # cache churn (r13 negative result; see session.wide_codegen_session)
-    from ..session import wide_codegen_session
+    # cache churn (r13 negative result; see session.scoped_session)
+    from ..session import scoped_session
 
-    spark = wide_codegen_session(spark)
+    spark = scoped_session(spark, {"spark.sql.codegen.maxFields": "256"})
     ev = keyed_events(spark, sf_dir).filter(F.col("value").isNotNull())
     base = ev.select(
         F.md5(F.col("event_id").cast("string")).alias("h"),

@@ -144,10 +144,10 @@ def evt_fdr_bh(spark, sf_dir):
     # 112 aggregate cells > the default 100-field codegen limit: build
     # on the maxFields=256 CHILD session so this one stage compiles
     # (measured −25% r13) without the global raise's suite-wide codegen
-    # cache churn (r13 negative result; see session.wide_codegen_session)
-    from ..session import wide_codegen_session
+    # cache churn (r13 negative result; see session.scoped_session)
+    from ..session import scoped_session
 
-    spark = wide_codegen_session(spark)
+    spark = scoped_session(spark, {"spark.sql.codegen.maxFields": "256"})
     ev = keyed_events(spark, sf_dir).filter(F.col("value").isNotNull())
     h = F.md5(F.col("event_id").cast("string"))
     base = ev.select("event_type", F.col("value_c").alias("v_c"), h.alias("h"))

@@ -191,7 +191,11 @@ def doc_dupgraph_modularity(spark, sf_dir):
 
     docs = fan_out(spark, t(spark, sf_dir, "documents"))
     sig = minhash_signatures_mapside(docs, n=3, num_hashes=8)
-    pairs = lsh_candidate_pairs(sig, bands=4, rows_per_band=2).localCheckpoint()
+    # lazy: dedup_clusters' pair count is the first job to read the
+    # pairs, and it fills this checkpoint on the way
+    pairs = lsh_candidate_pairs(sig, bands=4, rows_per_band=2).localCheckpoint(
+        eager=False
+    )
     # CC labels over edge-touched nodes only (the production operator
     # left-joins isolated docs back as singletons; modularity is over
     # the graph, so restrict to touched nodes)
@@ -202,7 +206,7 @@ def doc_dupgraph_modularity(spark, sf_dir):
     )
     # the candidate graph is far below dedup.LOCAL_GRAPH_MAX_PAIRS at
     # every registry scale, so the labels come from one union-find pass
-    labels = dedup_clusters(pairs, touched).localCheckpoint()
+    labels = dedup_clusters(pairs, touched).localCheckpoint(eager=False)
     edges = pairs.unionByName(
         pairs.select(
             F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")

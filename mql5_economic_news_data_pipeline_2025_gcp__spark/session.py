@@ -17,6 +17,7 @@ the ones that transfer to a multi-executor cluster at ~100 TB:
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
 from pyspark.sql import SparkSession
@@ -61,7 +62,7 @@ def get_spark(app_name: str = "mql5_econ_news_spark", cpus: int | None = None) -
         # cause). Interpreted eval for the two wide aggregates is the
         # cheaper GLOBAL trade; r14 recovers their codegen win with a
         # per-query-scoped child session instead — see
-        # wide_codegen_session below and OPTIMIZATION_r13/r14.md.
+        # scoped_session below and OPTIMIZATION_r13/r14.md.
         # answer unfiltered MIN/MAX/COUNT from parquet footer statistics
         # (high-water-mark scalar, catalog count probes) — a stats-only
         # scan instead of a data scan; Catalyst falls back automatically
@@ -81,54 +82,72 @@ def get_spark(app_name: str = "mql5_econ_news_spark", cpus: int | None = None) -
     return spark
 
 
-#: parent SparkSession → child session with wide-aggregate codegen.
-_WIDE_CODEGEN_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
-    weakref.WeakKeyDictionary()
-)
+#: parent SparkSession → {frozenset(confs): [child, conf fingerprint]}.
+_SCOPED: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+_SCOPED_LOCK = threading.Lock()
 
 
-def wide_codegen_session(spark: SparkSession) -> SparkSession:
-    """Child session (same SparkContext/shared state, OWN SQLConf) with
-    ``spark.sql.codegen.maxFields`` raised to 256 — the PER-QUERY scoping
-    of the r13 negative result (r14, VERDICT task 1).
+def scoped_session(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """Child of ``spark`` (same SparkContext and catalog, OWN SQLConf)
+    with ``confs`` on top of the parent's confs: the one way the engine
+    scopes a setting to some queries. Toggling the shared session
+    instead would leak the setting to every thread planning on it
+    (``serving.serve``'s handlers) and go stale if a restore is skipped.
 
-    The two single-pass statistic aggregates wider than the default
-    100-field whole-stage-codegen limit (``evt_fdr_bh``: 112 cells,
-    ``evt_permutation_test``: 132) drop their entire stage — scan,
-    filter, md5 projection, aggregate — to interpreted row-at-a-time
-    eval under the default. Raising the limit GLOBALLY was measured in
-    r13 to regress loop-heavy queries 3–6× (more/bigger generated
-    classes churn the 100-entry codegen class cache + janino recompile
-    per iteration; see the comment in :func:`get_spark`). A CHILD
-    session confines the raised limit to exactly the DataFrames built
-    on it: everything else plans under the default, so the suite-wide
-    blast radius is structurally gone — the two wide queries add two
-    stable generated classes that cache-hit across bench iterations.
+    - ``evt_fdr_bh`` and ``evt_permutation_test`` build on a child with
+      ``spark.sql.codegen.maxFields`` at 256 (see :func:`get_spark`).
+      Physical planning, where it is read, happens at the caller's
+      action; the child's SQLConf travels with the lazy frame.
+    - Stream drains start their query on a child
+      (``streaming/ingest.py::_run_to_end``): Spark reads the state
+      partition count and state-store provider once, at query start.
 
-    Why a child session and not ``spark.conf.set`` + restore inside the
-    query fn: the query fns return LAZY frames and physical planning
-    (where maxFields is read) happens at the caller's action — after a
-    ``finally`` restore would have already undone the setting. The
-    child's SQLConf travels WITH the returned DataFrame.
+    The child is made once per (parent, ``confs``) by ``cloneSession()``
+    and memoised with a weak key; each clone registers listener-bus
+    listeners that are never removed. On every call it catches up with
+    the parent:
 
-    On EVERY call the child re-syncs every explicitly-set ``spark.sql.*``
-    conf from the parent (and drops any the parent has since unset), so
-    semantics-bearing session state — time zone, legacy parquet flags,
-    test-lowered thresholds — matches the parent as of this call, not
-    as of first use. The child itself is memoized per parent session
-    (weak keys — a stopped parent frees the entry).
+    - ``spark.sql.*`` confs the parent has set or unset reach the child,
+      ``confs`` still winning. A hash of both sides' confs gates the
+      full diff, which costs ~100× more;
+    - the child gets exactly the parent's streaming query listeners: a
+      listener on the parent never hears a query started on a child.
     """
-    child = _WIDE_CODEGEN_SESSIONS.get(spark)
-    if child is None:
-        child = _WIDE_CODEGEN_SESSIONS[spark] = spark.newSession()
-    parent, mine = _sql_confs(spark), _sql_confs(child)
-    for k in mine.keys() - parent.keys():
-        child.conf.unset(k)
-    for k, v in parent.items():
-        if mine.get(k) != v:
-            child.conf.set(k, v)
-    child.conf.set("spark.sql.codegen.maxFields", "256")
-    return child
+    key = frozenset(confs.items())
+    with _SCOPED_LOCK:
+        scopes = _SCOPED.setdefault(spark, {})
+        entry = scopes.get(key)
+        if entry is None:
+            child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+            for k, v in confs.items():
+                child.conf.set(k, v)
+            entry = scopes[key] = [child, None]
+        child = entry[0]
+        if entry[1] != _conf_fingerprint(spark, child):
+            want, have = {**_sql_confs(spark), **confs}, _sql_confs(child)
+            for k in have.keys() - want.keys():
+                child.conf.unset(k)
+            for k, v in want.items():
+                if have.get(k) != v:
+                    child.conf.set(k, v)
+            entry[1] = _conf_fingerprint(spark, child)
+        theirs = list(spark._jsparkSession.streams().listListeners())
+        streams = child._jsparkSession.streams()
+        mine = list(streams.listListeners())
+        for listener in mine:
+            if listener not in theirs:
+                streams.removeListener(listener)
+        for listener in theirs:
+            if listener not in mine:
+                streams.addListener(listener)
+        return child
+
+
+def _conf_fingerprint(*sessions: SparkSession) -> tuple[int, ...]:
+    return tuple(
+        s._jsparkSession.sessionState().conf().getAllConfs().hashCode()
+        for s in sessions
+    )
 
 
 def _sql_confs(spark: SparkSession) -> dict[str, str]:

@@ -26,40 +26,34 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_session
 from ..sources import txn
 
-#: Stateful-operator partition count for the drains below. Streaming
-#: state partitioning is a DEPLOYMENT knob, not a data-scale artifact:
-#: it is fixed into the checkpoint at first start, each partition costs
-#: a state store instance + commit per micro-batch, and it should be
-#: sized to key-throughput (hundreds of keys at test SF -> 8; a 100 TB
-#: deployment sets its own via env/session conf before first start).
-#: Measured at sf0.1: the view-purchase join drains in 2.6 s at 8
-#: state partitions vs 6.5 s at 32 — pure per-store commit overhead.
-DEFAULT_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+# The confs a drain's streaming query starts with. Spark reads them once,
+# at query start, and fixes the state layout in the checkpoint, so they
+# belong to the query: a non-empty scope starts it on a memoised child of
+# the caller's session (``session.scoped_session``), never by toggling
+# the caller's session, which other threads plan on.
 
-
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int | None):
-    """Pin ``spark.sql.shuffle.partitions`` for the duration of a
-    streaming query start (Spark reads it once at query start to size
-    the state stores); restores the session value after."""
-    if n is None:
-        yield
-        return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+#: JVM-state drains (aggregates, dedup, stream-stream joins): 8 state
+#: partitions. State partitioning is sized to key throughput, not data
+#: scale, and each partition costs a state store commit per micro-batch
+#: — at sf0.1 the view-purchase join drains in 2.6 s at 8 vs 6.5 s at 32.
+JVM_STATE_CONFS = {"spark.sql.shuffle.partitions": "8"}
+#: transformWithState drains keep each state variable in its own column
+#: family, which only the RocksDB provider supports.
+TWS_STATE_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+}
+#: Python-state drains (``applyInPandasWithState``) and stateless sinks
+#: start on the caller's session: their cost is per-group Python work,
+#: one worker per state partition, so they keep the full parallelism.
+PYTHON_STATE_CONFS: dict[str, str] = {}
 
 #: One symlink dir per source parquet, reused across calls and removed at
 #: interpreter exit — repeated bench/correctness runs no longer accumulate
@@ -146,13 +140,44 @@ def _stream_source(
     )
 
 
+def _run_to_end(sdf: DataFrame, confs: dict[str, str], configure) -> SparkSession:
+    """Start ``configure(sdf.writeStream)``, run it until its source is
+    drained, stop it, and return the session the query ran on — the one
+    place in ``streaming/`` that starts a query.
+
+    A non-empty ``confs`` rebinds the built frame's plan onto
+    ``scoped_session(sdf.sparkSession, confs)`` first, so the query
+    starts with those confs while the caller's session keeps its own.
+    """
+    if confs:
+        sdf = _on_session(scoped_session(sdf.sparkSession, confs), sdf)
+    q = configure(sdf.writeStream).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return sdf.sparkSession
+
+
+def _on_session(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df``'s analysed plan as a frame of ``spark`` (a session sharing
+    its SparkContext), so it plans and runs under ``spark``'s confs."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)
+
+
 def _drain_to_table(
     agg: DataFrame,
     mode: str = "complete",
-    state_partitions: int | None = DEFAULT_STATE_PARTITIONS,
+    confs: dict[str, str] = JVM_STATE_CONFS,
 ) -> DataFrame:
-    """Run a streaming frame to exhaustion into a memory sink and return
-    the materialized result as a batch DataFrame.
+    """Run a streaming frame to exhaustion into a memory sink, with
+    ``confs`` scoped to the query, and return the materialized result as
+    a batch DataFrame on ``agg``'s session. The sink's temp view is
+    dropped: the returned frame holds the sink's rows itself, so the
+    caller's session (and the scoped child) keep no view per drain.
 
     SCALE RULE: the memory sink materializes every output row in DRIVER
     memory — it is the same failure mode as ``.collect()`` and is banned
@@ -164,27 +189,22 @@ def _drain_to_table(
     by ``tests/test_streaming.py::test_memory_sink_ban``.
     """
     name = "stream_out_" + uuid.uuid4().hex[:8]
-    with _state_partitions(agg.sparkSession, state_partitions):
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return agg.sparkSession.table(name)
+    ran_on = _run_to_end(
+        agg, confs, lambda w: w.outputMode(mode).format("memory").queryName(name)
+    )
+    out = _on_session(agg.sparkSession, ran_on.table(name))
+    ran_on.catalog.dropTempView(name)
+    return out
 
 
 def _drain_via_foreachbatch(
     sdf: DataFrame,
     batch_fn=None,
-    state_partitions: int | None = DEFAULT_STATE_PARTITIONS,
+    confs: dict[str, str] = JVM_STATE_CONFS,
 ) -> DataFrame:
-    """Drain a streaming frame through ``foreachBatch`` → parquet and
-    return the files as a batch DataFrame.
+    """Drain a streaming frame through ``foreachBatch`` → parquet, with
+    ``confs`` scoped to the query, and return the files as a batch
+    DataFrame read on ``sdf``'s session.
 
     This is the scale-safe drain for un-aggregated streams: each
     micro-batch is written by the executors straight to parquet —
@@ -204,16 +224,10 @@ def _drain_via_foreachbatch(
             batch_df = batch_fn(batch_df)
         batch_df.write.mode("append").parquet(out_dir)
 
-    with _state_partitions(sdf.sparkSession, state_partitions):
-        q = (
-            sdf.writeStream.foreachBatch(_write)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _run_to_end(
+        sdf, confs,
+        lambda w: w.foreachBatch(_write).option("checkpointLocation", ckpt),
+    )
     return sdf.sparkSession.read.parquet(out_dir)
 
 
@@ -308,22 +322,20 @@ def stream_upsert_foreachbatch(
         "event_date", F.to_date("ts")
     )
 
+    # each batch merges on the stream's own session, so under the
+    # drain's scoped confs, not the caller's
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         txn.merge_upsert(
-            spark, target_dir, batch_df, key=list(key), recency_col="ts",
-            tie_col="event_id", partition_col="event_date",
+            batch_df.sparkSession, target_dir, batch_df, key=list(key),
+            recency_col="ts", tie_col="event_id", partition_col="event_date",
         )
 
-    with _state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            events.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", target_dir + ".checkpoint")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _run_to_end(
+        events, JVM_STATE_CONFS,
+        lambda w: w.foreachBatch(_merge).option(
+            "checkpointLocation", target_dir + ".checkpoint"
+        ),
+    )
     return txn.read(spark, target_dir)
 
 
@@ -463,16 +475,12 @@ def stream_incremental_rollup(
         F.round(F.col("value") * 100).cast("bigint").alias("value_c"),
     )
 
-    with _state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            with_month.writeStream.foreachBatch(state.fold)
-            .option("checkpointLocation", _scratch_dir("rollup_ckpt_"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _run_to_end(
+        with_month, JVM_STATE_CONFS,
+        lambda w: w.foreachBatch(state.fold).option(
+            "checkpointLocation", _scratch_dir("rollup_ckpt_")
+        ),
+    )
     return state.read()
 
 
@@ -501,8 +509,12 @@ class _TxnFoldState:
         return txn._last_batch_id(txn._head(self.root)[1])
 
     def fold(self, batch_df: DataFrame, batch_id: int) -> None:
+        # the old state is read on the batch's session, so the merge
+        # plans under the drain's scoped confs
         def build(m):
-            old = None if m is None else txn._scan(self.spark, self.root, m["files"])
+            old = None if m is None else txn._scan(
+                batch_df.sparkSession, self.root, m["files"]
+            )
             return {"files": txn._write_files(self._merge(old, batch_df), self.root)}
 
         txn._commit_batch(self.root, "overwrite", batch_id, build)
@@ -714,16 +726,12 @@ def stream_heavy_hitters(
         )
         .withColumn("wt", F.lit(1).cast("bigint"))
     )
-    with _state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            cells.writeStream.foreachBatch(state.fold)
-            .option("checkpointLocation", _scratch_dir("cms_ckpt_"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _run_to_end(
+        cells, JVM_STATE_CONFS,
+        lambda w: w.foreachBatch(state.fold).option(
+            "checkpointLocation", _scratch_dir("cms_ckpt_")
+        ),
+    )
     sketch = state.read().select(
         "depth", "bucket", F.col("sum_wt").alias("cnt")
     )
@@ -840,16 +848,12 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("reg"),
         )
     )
-    with _state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            regs.writeStream.foreachBatch(state.fold)
-            .option("checkpointLocation", _scratch_dir("hll_ckpt_"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _run_to_end(
+        regs, JVM_STATE_CONFS,
+        lambda w: w.foreachBatch(state.fold).option(
+            "checkpointLocation", _scratch_dir("hll_ckpt_")
+        ),
+    )
     agg = (
         state.read()
         .groupBy("event_type")
@@ -952,18 +956,13 @@ def stream_pysink_roundtrip(
         .option("max_rows", str(n_rows))
         .load()
     )
-    q = (
-        sdf.writeStream.format("jsonl_sink")
+    _run_to_end(
+        sdf, PYTHON_STATE_CONFS,
+        lambda w: w.format("jsonl_sink")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
+        .trigger(processingTime="0 seconds"),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(60)
     committed = committed_stream_rows(out)
     paths = [os.path.join(out, p) for p in committed["parts"]]
     if not paths:

@@ -29,7 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .ingest import _drain_to_table, _stream_source
+from .ingest import (
+    PYTHON_STATE_CONFS,
+    TWS_STATE_CONFS,
+    _drain_to_table,
+    _stream_source,
+)
 
 _OUT_SCHEMA = "user_id long, event_type string, n long, max_c long, hwm_ts timestamp"
 _STATE_SCHEMA = "n long, max_c long, hwm_us long"
@@ -90,7 +95,7 @@ def stream_series_running_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator's cost is per-group PYTHON compute (one pandas worker per
     # state partition), not state-store commit overhead — 8 partitions
     # would cap it at 8 parallel workers (measured 3.7 s vs 2.9 s at 32)
-    return _drain_to_table(out, mode="update", state_partitions=None)
+    return _drain_to_table(out, mode="update", confs=PYTHON_STATE_CONFS)
 
 
 # ---------------------------------------------------- transformWithState
@@ -122,10 +127,11 @@ def series_state_tws(
       this raises ``RuntimeError`` and the pytest gate skips.
     - TWS stores each state variable in its own column family, which
       the default HDFS-backed state store rejects — the drain below
-      pins ``RocksDBStateStoreProvider`` (rocksdbjni ships with Spark
-      4) for the duration of the query and restores the session conf
-      after. RocksDB is also the provider a production deployment
-      wants: state spills to disk + changelog checkpointing.
+      starts the query with ``RocksDBStateStoreProvider`` (rocksdbjni
+      ships with Spark 4) scoped to it (``TWS_STATE_CONFS``); the
+      caller's session conf is never touched. RocksDB is also the
+      provider a production deployment wants: state spills to disk +
+      changelog checkpointing.
 
     Why this API at scale: state lives in named, typed variables
     (ValueState here; List/Map for bigger shapes) with per-variable TTL
@@ -216,23 +222,7 @@ def series_state_tws(
         outputMode="Update",
         timeMode="None",
     )
-    # TWS keeps each state variable in its own column family — only the
-    # RocksDB provider supports that; pin it for this drain and restore
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        result = _drain_to_table(out, mode="update", state_partitions=None)
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-    return result.select(
+    return _drain_to_table(out, mode="update", confs=TWS_STATE_CONFS).select(
         "user_id",
         "event_type",
         "n",
@@ -331,7 +321,7 @@ def stream_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _drain_to_table(out, mode="update", state_partitions=None)
+    return _drain_to_table(out, mode="update", confs=PYTHON_STATE_CONFS)
 
 
 # ------------------------------------------------------ token bucket
@@ -414,7 +404,7 @@ def stream_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _drain_to_table(out, mode="update", state_partitions=None)
+    return _drain_to_table(out, mode="update", confs=PYTHON_STATE_CONFS)
 
 
 # ----------------------------------------------------------------- PH
@@ -503,7 +493,7 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _drain_to_table(out, mode="update", state_partitions=None)
+    return _drain_to_table(out, mode="update", confs=PYTHON_STATE_CONFS)
 
 
 def interval_union_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,20 +595,7 @@ def interval_union_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        return _drain_to_table(out, mode="update", state_partitions=None)
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
+    return _drain_to_table(out, mode="update", confs=TWS_STATE_CONFS)
 
 
 # ---------------------------------------------------- event-time timers
@@ -780,20 +757,7 @@ def session_close_tws(
         outputMode="Append",
         timeMode="EventTime",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        return _drain_to_table(out, mode="append", state_partitions=None)
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
+    return _drain_to_table(out, mode="append", confs=TWS_STATE_CONFS)
 
 
 # ---------------------------------------------------- MapState histogram
@@ -878,17 +842,4 @@ def user_type_histogram_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        return _drain_to_table(out, mode="update", state_partitions=None)
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
+    return _drain_to_table(out, mode="update", confs=TWS_STATE_CONFS)

@@ -121,26 +121,15 @@ def build_tws_frame(spark, sf_dir: str, trivial: bool):
 
 def drain_once(spark, sf_dir: str, trivial: bool, partitions: int) -> float:
     from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.ingest import (  # noqa: E501
+        TWS_STATE_CONFS,
         _drain_to_table,
     )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        t0 = time.time()
-        out = build_tws_frame(spark, sf_dir, trivial)
-        _drain_to_table(out, mode="update", state_partitions=partitions).count()
-        return time.time() - t0
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
+    confs = {**TWS_STATE_CONFS, "spark.sql.shuffle.partitions": str(partitions)}
+    t0 = time.time()
+    out = build_tws_frame(spark, sf_dir, trivial)
+    _drain_to_table(out, mode="update", confs=confs).count()
+    return time.time() - t0
 
 
 def main() -> None:

@@ -116,31 +116,33 @@ def test_registry_query_runs_under_stock_confs(stock_confs, name):
         )
 
 
-def test_wide_codegen_session_tracks_parent_confs(spark):
-    """The maxFields=256 child session of ``evt_fdr_bh`` and
-    ``evt_permutation_test`` re-syncs the parent's ``spark.sql.*``
-    confs on every call: a conf the parent sets, or unsets, after the
-    child's first use reaches the child."""
+def test_scoped_session_tracks_parent_confs(spark):
+    """A scoped child session (here the maxFields=256 child of
+    ``evt_fdr_bh`` and ``evt_permutation_test``) re-syncs the parent's
+    ``spark.sql.*`` confs on every call: a conf the parent sets, or
+    unsets, after the child's first use reaches the child, and the
+    scope's own confs stay on top."""
     from mql5_economic_news_data_pipeline_2025_gcp__spark.session import (
-        wide_codegen_session,
+        scoped_session,
     )
 
+    wide = {"spark.sql.codegen.maxFields": "256"}
     tz, extra = "spark.sql.session.timeZone", "spark.sql.caseSensitive"
-    child = wide_codegen_session(spark)
+    child = scoped_session(spark, wide)
     old_tz = spark.conf.get(tz)
     try:
         spark.conf.set(tz, "America/New_York")
         spark.conf.set(extra, "true")
-        assert wide_codegen_session(spark) is child
+        assert scoped_session(spark, dict(wide)) is child
         assert child.conf.get(tz) == "America/New_York"
         assert child.conf.get(extra) == "true"
         spark.conf.unset(extra)
-        wide_codegen_session(spark)
+        scoped_session(spark, wide)
         assert child.conf.get(extra) == spark.conf.get(extra) == "false"
     finally:
         spark.conf.set(tz, old_tz)
         spark.conf.unset(extra)
-        wide_codegen_session(spark)
+        scoped_session(spark, wide)
     assert child.conf.get(tz) == old_tz
     assert child.conf.get("spark.sql.codegen.maxFields") == "256"
     assert spark.conf.get("spark.sql.codegen.maxFields") == "100"

@@ -646,6 +646,10 @@ JOB_BUDGETS = {
     # session. The checkpointed CC rounds ran 24 and 48 cold.
     "doc_dedup_clusters": 11,
     "emb_dedup_clusters": 11,
+    # same rule (19 warm): the CC kernel's pair count fills the lazy pair
+    # and label checkpoints, the rest is the query's own broadcasts and
+    # shuffle stages. Eager checkpoints ran 21.
+    "doc_dupgraph_modularity": 20,
 }
 
 

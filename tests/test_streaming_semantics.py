@@ -512,3 +512,138 @@ def test_streaming_listener_records_progress(spark, tmp_path):
     assert sum(r["n_input_rows"] for r in lines) == 1000
     # and the sink agrees with the telemetry
     assert spark.read.parquet(out).count() == 1000
+
+
+# ---------------------------------------------------------------------------
+# Scoped drains: a drain's confs (state partitions, state-store provider)
+# live on a memoised child of the caller's session (session.scoped_session);
+# the caller's session is never toggled, still hears the drain's progress,
+# and keeps no per-drain temp view.
+# ---------------------------------------------------------------------------
+
+_SF = "/root/testdata/sf0.001"
+
+
+def _require_tws_runtime():
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.compat import (
+        ensure_protobuf,
+    )
+
+    if not ensure_protobuf():
+        pytest.skip("no google.protobuf runtime anywhere on this image: "
+                    "transformWithState state server cannot start")
+
+
+def test_foreachbatch_drain_leaves_parent_partitions(spark):
+    """Inside a micro-batch of a JVM-state drain the stream runs on 8
+    state partitions while the caller's session still reads its own
+    ``spark.sql.shuffle.partitions``."""
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.ingest import (
+        _drain_via_foreachbatch,
+        _events_stream,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    seen = []
+
+    def _probe(batch_df):
+        seen.append((spark.conf.get(key), batch_df.sparkSession.conf.get(key)))
+        return batch_df.groupBy("event_type").count()
+
+    spark.conf.set(key, "5")
+    try:
+        out = _drain_via_foreachbatch(_events_stream(spark, _SF), batch_fn=_probe)
+        assert out.count() > 0
+    finally:
+        spark.conf.set(key, old)
+    assert seen and set(seen) == {("5", "8")}
+
+
+def test_tws_drain_leaves_parent_provider(spark):
+    """A thread polling the caller's state-store provider while a
+    transformWithState drain runs never sees the RocksDB provider the
+    drain starts with."""
+    import threading
+
+    _require_tws_runtime()
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.stateful import (
+        series_state_tws,
+    )
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    before = spark.conf.get(key, None)
+    seen, done = set(), threading.Event()
+
+    def _poll():
+        while not done.is_set():
+            seen.add(spark.conf.get(key, None))
+            done.wait(0.01)
+
+    th = threading.Thread(target=_poll)
+    th.start()
+    try:
+        assert series_state_tws(spark, _SF).count() > 0
+    finally:
+        done.set()
+        th.join()
+    assert seen == {before}
+
+
+def test_parent_listener_hears_scoped_drains(spark):
+    """``monitor.watch`` on the caller's session records the micro-batches
+    of a JVM-state drain and a transformWithState drain, both of which
+    start on a scoped child session."""
+    import time
+
+    _require_tws_runtime()
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.ingest import (
+        stream_windowed_counts,
+    )
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.monitor import (
+        watch,
+    )
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.stateful import (
+        series_state_tws,
+    )
+
+    rec = watch(spark)
+    try:
+        for drain in (stream_windowed_counts, series_state_tws):
+            n0 = len(rec.starts)
+            drain(spark, _SF)
+            deadline = time.time() + 30
+            while time.time() < deadline:
+                ids = {s["id"] for s in rec.starts[n0:]}
+                if ids and any(r["id"] in ids for r in rec.records):
+                    break
+                time.sleep(0.1)
+            assert len(ids) == 1, drain.__name__
+            rows = [r for r in rec.records if r["id"] in ids]
+            assert rows and sum(r["n_input_rows"] or 0 for r in rows) > 0
+    finally:
+        spark.streams.removeListener(rec)
+
+
+def test_memory_drain_leaves_no_temp_view(spark):
+    """A memory-sink drain returns its rows without leaving a temp view
+    on the caller's session or on the scoped child."""
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.session import (
+        scoped_session,
+    )
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.streaming.ingest import (
+        JVM_STATE_CONFS,
+        stream_windowed_counts,
+    )
+
+    def _views(s):
+        return {t.name for t in s.catalog.listTables() if t.isTemporary}
+
+    before = _views(spark)
+    out = stream_windowed_counts(spark, _SF)
+    assert out.count() > 0
+    assert _views(spark) == before
+    assert not any(
+        v.startswith("stream_out_")
+        for v in _views(scoped_session(spark, JVM_STATE_CONFS))
+    )
